@@ -97,11 +97,15 @@ object Ewma {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "ewma", exprs => Ewma(exprs(0), exprs(1)), "built-in")
 
-  /** `ewma(col, span)` as a Column; apply `.over(Window...orderBy(ts))`. */
-  def bySpan(spark: SparkSession, col: Column, span: Int): Column = {
+  /** pandas `ewm(span)` smoothing factor, α = 2/(span+1). */
+  def alpha(span: Int): Double = {
     require(span >= 1, s"span must be >= 1, got $span")
-    byAlpha(spark, col, 2.0 / (span + 1.0))
+    2.0 / (span + 1.0)
   }
+
+  /** `ewma(col, span)` as a Column; apply `.over(Window...orderBy(ts))`. */
+  def bySpan(spark: SparkSession, col: Column, span: Int): Column =
+    byAlpha(spark, col, alpha(span))
 
   def byAlpha(spark: SparkSession, col: Column, alpha: Double): Column = {
     register(spark)

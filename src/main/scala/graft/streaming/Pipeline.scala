@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.indicators.Indicators
+import graft.indicators.IndicatorFold
 import graft.ingest.Envelope
 import graft.sink.Router
 
@@ -23,8 +23,8 @@ import graft.sink.Router
   *   - T7: the reference applies a grouped-map pandas UDF directly on a
   *     streaming DataFrame, which Spark's UnsupportedOperationChecker
   *     rejects — its *intent* is per-trigger indicator recomputation. We
-  *     compute indicators inside `foreachBatch` over the upserted price
-  *     table (batch DataFrame → window expressions), which is legal,
+  *     derive indicators inside `foreachBatch` over the upserted price
+  *     table (one per-series fold, [[deriveIndicators]]), which is legal,
   *     deterministic, and matches that intent.
   *
   * The source is a line-delimited JSON file stream (one envelope per
@@ -62,43 +62,67 @@ object Pipeline {
   }
 
   /** One micro-batch: parse → demux → upsert the four entity tables →
-    * recompute indicators for the keys present in this batch. */
+    * re-derive indicators from each touched series' earliest timestamp in
+    * this batch onward ([[deriveIndicators]] with [[changedFrom]]).
+    *
+    * Re-running a batch, whole or after only its entity writes (the
+    * foreachBatch replay after a crash), leaves the same sink: the entity
+    * upserts are idempotent, and the indicator rows the batch can change
+    * are re-derived from the stored prices. */
   def processBatch(spark: SparkSession, batch: DataFrame, sinkDir: String,
       mcapTs: Option[Timestamp] = None): Unit = {
     val d = Envelope.demux(Envelope.parse(batch), mcapTs)
     Router.writeBatch(spark, sinkDir, Seq(d.coins, d.price, d.ohlc, d.marketCap))
-    deriveIndicators(spark, sinkDir,
-      Some(d.price.select(col("coin_id"), col("exchange")).distinct()))
+    deriveIndicators(spark, sinkDir, Some(changedFrom(d.price)))
   }
 
-  /** T7: indicator derivation over the price table, restricted to the
-    * series keys touched by the current batch (left-semi join against the
-    * batch's key set) — per-batch cost scales with the batch's keys, not
-    * with total accumulated history. Written through the same upsert sink
-    * (update-mode semantics — recomputed rows replace prior values on
-    * their PK). Pass `batchKeys=None` to recompute everything (backfill).
+  /** Per (coin_id, exchange) series in a batch's price rows, the earliest
+    * timestamp it carries as `changed_from`; null when any of its rows has
+    * a null timestamp (which sorts first, so the whole series changes). */
+  def changedFrom(price: DataFrame): DataFrame =
+    price.groupBy(col("coin_id"), col("exchange"))
+      .agg(when(count(lit(1)) === count(col("timestamp")), min(col("timestamp")))
+        .as("changed_from"))
+
+  /** T7: derive the indicators from the stored price table and upsert them
+    * into `technical_indicators`.
     *
-    * For strict O(batch) incremental cost use
-    * [[StatefulIndicators.attach]], which carries per-key state across
-    * batches instead of re-reading each touched key's history. */
+    * Read: the full stored history of every series named in `changed`
+    * (columns coin_id, exchange, changed_from — see [[changedFrom]]), or of
+    * every series when `changed` is None (backfill). The read grows with
+    * the touched series' history, not with the batch.
+    *
+    * Written: each touched series' changed suffix only — its rows at or
+    * after `changed_from`. A row's indicators depend only on its series'
+    * prices at or before it, so every earlier stored row is still exact.
+    * None writes every row.
+    *
+    * Computed by [[IndicatorFold.derive]] in one exchange, sort and fold.
+    * After the upsert, `technical_indicators` equals
+    * [[graft.indicators.Indicators.withIndicators]] over `price_data`
+    * exactly, not within a tolerance (PipelineExactnessSpec).
+    *
+    * [[StatefulIndicators.attach]] folds the same kernel with per-key
+    * state carried by a streaming query; `GroupState` does not survive
+    * across `processBatch` calls, so this path re-reads instead. */
   def deriveIndicators(spark: SparkSession, sinkDir: String,
-      batchKeys: Option[DataFrame] = None): Unit = {
+      changed: Option[DataFrame] = None): Unit = {
     val priceDir = s"$sinkDir/price_data"
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(priceDir))) {
       val all = spark.read.parquet(priceDir)
-      val price = batchKeys match {
-        case Some(keys) =>
-          all.join(broadcast(keys), Seq("coin_id", "exchange"), "left_semi")
-        case None => all
+      val (price, from) = changed match {
+        case Some(c) =>
+          val keys = c.select(col("coin_id").as("changed_coin"),
+            col("exchange").as("changed_exchange"), col("changed_from"))
+          // null-safe: a series with a null key is a series too
+          (all.join(broadcast(keys),
+            all("coin_id") <=> keys("changed_coin") &&
+              all("exchange") <=> keys("changed_exchange")),
+            col("changed_from"))
+        case None => (all, lit(null).cast("timestamp"))
       }
-      val ind = Indicators.withIndicators(
-          price,
-          keys = Seq("coin_id", "exchange"),
-          order = Seq(col("timestamp")),
-          value = col("price"))
-        .select(col("coin_id"), col("exchange"), col("timestamp"),
-          col("sma_20"), col("ema_20"), col("rsi_14"), col("macd"))
-      Router.upsert(spark, ind, "technical_indicators", sinkDir)
+      Router.upsert(spark, IndicatorFold.derive(price, from).toDF(),
+        "technical_indicators", sinkDir)
     }
   }
 }

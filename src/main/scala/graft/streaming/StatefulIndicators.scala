@@ -1,27 +1,27 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.indicators.IndicatorFold
 import graft.model.Schemas.{IndicatorRow, PriceTick}
 
 /** Streaming-native technical indicators: per-key state carried across
   * micro-batches with `flatMapGroupsWithState`.
   *
-  * This is the incremental alternative to [[Pipeline.deriveIndicators]]'s
-  * per-batch recomputation (SURVEY.md §2.11 T7): instead of re-reading the
-  * whole price table every trigger, each (coin_id, exchange) key holds
-  * O(1) state — the last 20 prices plus three EMA accumulators — and each
-  * arriving tick emits exactly one indicator row. At 100 TB/day of ticks
-  * this is the only shape that works: state size is
-  * `#keys × (20 doubles + 4 longs)`, independent of history length.
+  * The incremental counterpart of [[Pipeline.deriveIndicators]], which
+  * re-reads the full stored history of every series a batch touches
+  * (`GroupState` lives in a streaming query, not across `processBatch`
+  * calls). Here each (coin_id, exchange) key holds O(1) state — the last
+  * 20 prices, three EMA accumulators and the row count — and each
+  * arriving tick emits exactly one indicator row, so a batch reads only
+  * its own ticks. State size is `#keys × (20 doubles + 4 longs)`,
+  * independent of history length.
   *
-  * Semantics are bit-identical to the batch window formulation (asserted
-  * in StatefulIndicatorsSpec): pandas-parity leading-null masks, EMA
-  * `adjust=False` seeding, Cutler RSI with the first delta counting as a
-  * zero gain/loss.
+  * Both paths fold the same kernel, [[IndicatorFold]], so results are
+  * bit-identical to the batch window formulation
+  * ([[graft.indicators.Indicators.withIndicators]]; StatefulIndicatorsSpec
+  * compares with exact equality).
   *
   * Ordering contract: ticks may arrive out of order WITHIN a micro-batch
   * (sorted here before folding) but must not straddle batches out of
@@ -41,56 +41,19 @@ object StatefulIndicators {
       ema26: Double,
       n: Long)
 
-  private val a12 = 2.0 / 13.0
-  private val a20 = 2.0 / 21.0
-  private val a26 = 2.0 / 27.0
-
-  private[streaming] def step(st: Option[IndState], p: Double): IndState = st match {
-    case None => IndState(List(p), p, p, p, 1L)
-    case Some(s) =>
-      IndState(
-        recent = (s.recent :+ p).takeRight(20),
-        ema12 = a12 * p + (1 - a12) * s.ema12,
-        ema20 = a20 * p + (1 - a20) * s.ema20,
-        ema26 = a26 * p + (1 - a26) * s.ema26,
-        n = s.n + 1)
-  }
-
-  private[streaming] def indicators(s: IndState): (Option[Double], Option[Double], Option[Double], Option[Double]) = {
-    val sma20 = if (s.n >= 20) Some(s.recent.sum / 20.0) else None
-    val rsi14 =
-      if (s.n < 14) None
-      else {
-        // deltas over the trailing 14 rows; when the series start is
-        // inside the window its missing delta counts as 0 (pandas
-        // `where` semantics on the leading NaN)
-        val prices = s.recent.takeRight(math.min(15, s.n).toInt)
-        val deltas = prices.sliding(2).collect { case List(a, b) => b - a }.toList
-        val padded = if (s.n == 14) 0.0 :: deltas else deltas
-        val gains = padded.map(d => if (d > 0) d else 0.0)
-        val losses = padded.map(d => if (d < 0) -d else 0.0)
-        val ag = gains.sum / 14.0
-        val al = losses.sum / 14.0
-        if (al == 0.0 && ag == 0.0) None
-        else if (al == 0.0) Some(100.0)
-        else Some(100.0 - 100.0 / (1.0 + ag / al))
-      }
-    (sma20, Some(s.ema20), rsi14, Some(s.ema12 - s.ema26))
-  }
-
   private def flatMapFn(
       key: (String, String),
       rows: Iterator[PriceTick],
       state: GroupState[IndState]): Iterator[IndicatorRow] = {
     val sorted = rows.toSeq.sortBy(t => (t.timestamp.getTime, t.price))
-    var st = state.getOption
+    val fold = new IndicatorFold
+    state.getOption.foreach(s => fold.restore(s.recent, s.ema12, s.ema20, s.ema26, s.n))
     val out = sorted.map { t =>
-      val next = step(st, t.price)
-      st = Some(next)
-      val (sma, ema, rsi, macd) = indicators(next)
-      IndicatorRow(key._1, key._2, t.timestamp, sma, ema, rsi, macd)
+      fold.push(t.price)
+      fold.emit(key._1, key._2, t.timestamp)
     }
-    st.foreach(state.update)
+    if (fold.rows > 0)
+      state.update(IndState(fold.recent, fold.ema12, fold.ema20, fold.ema26, fold.rows))
     out.iterator
   }
 

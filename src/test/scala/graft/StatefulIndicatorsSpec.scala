@@ -30,15 +30,13 @@ class StatefulIndicatorsSpec extends SparkSpec {
 
   private def check(got: Seq[graft.model.Schemas.IndicatorRow]): Unit = {
     assert(got.size === series.size)
+    // exact: both sides fold the same sums and recurrences in the same order
     got.foreach { r =>
       val (sma, ema, rsi, macd) = expected((r.coin_id, r.timestamp.getTime))
-      def eq(a: Option[Double], b: Option[Double], tag: String): Unit = (a, b) match {
-        case (None, None) => ()
-        case (Some(x), Some(y)) => assert(math.abs(x - y) < 1e-9, s"$tag at ${r.timestamp}")
-        case other => fail(s"$tag mismatch $other at ${r.timestamp}")
-      }
-      eq(r.sma_20, sma, "sma"); eq(r.ema_20, ema, "ema")
-      eq(r.rsi_14, rsi, "rsi"); eq(r.macd, macd, "macd")
+      assert(r.sma_20 === sma, s"sma at ${r.timestamp}")
+      assert(r.ema_20 === ema, s"ema at ${r.timestamp}")
+      assert(r.rsi_14 === rsi, s"rsi at ${r.timestamp}")
+      assert(r.macd === macd, s"macd at ${r.timestamp}")
     }
   }
 

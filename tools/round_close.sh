@@ -27,8 +27,8 @@ python3 tools/type_audit.py /root/testdata/sf0.01 /tmp/round_close_verify | tail
 
 if [[ "$SKIP_BENCH" != "--skip-bench" ]]; then
   echo "== bench (sf0.1) =="
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
-    tools/run_main.sh graft.Bench
+  # Bench reads sf0.1 by default; one Spark core per CPU of this machine
+  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" tools/run_main.sh graft.Bench
 fi
 
 echo "== extension smoke (SQL path) =="

@@ -13,8 +13,13 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-exec java $ADD_OPENS -Xmx${SPARK_DRIVER_MEM:-31g} \
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
+# Spark's jars: $SPARK_HOME, else the installation spark-submit runs from
+SPARK_HOME="${SPARK_HOME:-$(dirname "$(dirname "$(readlink -f "$(command -v spark-submit)")")")}"
+# heap: half of MemTotal, clamped to 2-8g (as the tier-1 verify sizes it)
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
+exec java $ADD_OPENS -Xmx$MEM \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Dlog4j2.configurationFile=/root/repo/conf/log4j2.properties \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -Dlog4j2.configurationFile="$ROOT/conf/log4j2.properties" \
+  -cp "$ROOT/target/scala-2.13/classes:$SPARK_HOME/jars/*" \
   "$CLS" "$@"
