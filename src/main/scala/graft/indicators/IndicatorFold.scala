@@ -3,7 +3,7 @@ package graft.indicators
 import java.sql.Timestamp
 import java.util.Objects
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.col
 
 import graft.model.Schemas.IndicatorRow
@@ -144,38 +144,36 @@ object IndicatorFold {
 
   /** Indicator rows of every (coin_id, exchange) series in `price`
     * (columns coin_id, exchange, timestamp, price), in one pass: one hash
-    * exchange on the series key, a sort within partitions by (key,
-    * timestamp), and one fold per series. Each series is folded whole,
-    * but a row is emitted only when its timestamp is at or after `from`
-    * (a timestamp column of `price`, constant per series); a null `from`
-    * emits every row of its series. */
-  def derive(price: DataFrame, from: Column): Dataset[IndicatorRow] = {
+    * exchange on the series key, then [[foldSeries]]. */
+  def derive(price: DataFrame): Dataset[IndicatorRow] =
+    foldSeries(price.repartition(col("coin_id"), col("exchange")))
+
+  /** [[derive]] over rows already partitioned so that each series lies in
+    * one partition: a sort within partitions by (key, timestamp) and one
+    * fold per series. Adds no exchange. */
+  def foldSeries(price: DataFrame): Dataset[IndicatorRow] = {
     val spark = price.sparkSession
     import spark.implicits._
     price
-      .select(col("coin_id"), col("exchange"), col("timestamp"), col("price"),
-        from.as("from"))
-      .repartition(col("coin_id"), col("exchange"))
+      .select(col("coin_id"), col("exchange"), col("timestamp"), col("price"))
       .sortWithinPartitions(col("coin_id"), col("exchange"), col("timestamp"))
-      .as[(String, String, Timestamp, Option[Double], Timestamp)]
+      .as[(String, String, Timestamp, Option[Double])]
       .mapPartitions(foldSorted)
   }
 
   private def foldSorted(
-      rows: Iterator[(String, String, Timestamp, Option[Double], Timestamp)])
-      : Iterator[IndicatorRow] = {
+      rows: Iterator[(String, String, Timestamp, Option[Double])]): Iterator[IndicatorRow] = {
     val fold = new IndicatorFold
     var started = false
     var coin: String = null
     var exchange: String = null
-    rows.flatMap { case (c, e, ts, price, from) =>
+    rows.map { case (c, e, ts, price) =>
       if (!started || !Objects.equals(c, coin) || !Objects.equals(e, exchange)) {
         fold.reset()
         started = true; coin = c; exchange = e
       }
       price.fold(fold.pushNull())(fold.push)
-      if (from == null || (ts != null && !ts.before(from))) Some(fold.emit(c, e, ts))
-      else None
+      fold.emit(c, e, ts)
     }
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.Dedup
 
@@ -54,38 +55,71 @@ object Router {
     * newer batch beats stored rows on exact PK collision; within one
     * batch, ties on the PK are broken deterministically by the remaining
     * columns (descending) so re-running the same input stores the same
-    * row regardless of partition order. */
+    * row regardless of partition order.
+    *
+    * The stored table is read with the batch's schema, every column made
+    * nullable, so no footer-inference job runs: a stored file missing a
+    * column reads that column as null, and a stored column whose type
+    * conflicts with the batch's fails the upsert. */
   def upsert(spark: SparkSession, batch: DataFrame, table: String,
       baseDir: String): Unit = {
+    stage(merge(spark, batch, table, baseDir), table, baseDir)
+    swap(table, baseDir)
+  }
+
+  /** The rows [[upsert]] would store: `batch` ∪ the stored table, one row
+    * per PK. With `cluster` (a prefix of the PK) the union is first
+    * hash-partitioned on those columns; that partitioning satisfies the
+    * dedup window, so the plan has that one exchange and its output stays
+    * clustered on `cluster` and sorted by the PK within each partition.
+    * Recovers the table from an interrupted swap before reading it. */
+  def merge(spark: SparkSession, batch: DataFrame, table: String, baseDir: String,
+      cluster: Seq[String] = Nil): DataFrame = {
     val keys = TableKeys(table)
     val dest = s"$baseDir/$table"
-    val old = s"$baseDir/.$table.old"
-    val tmp = s"$baseDir/.$table.tmp"
-    // crash recovery: a previous upsert may have died between the
-    // rename-aside and the tmp->dest move — the .old dir is then the
-    // authoritative table
-    if (!Files.exists(Paths.get(dest)) && Files.exists(Paths.get(old)))
-      Files.move(Paths.get(old), Paths.get(dest))
-    deleteTree(old); deleteTree(tmp)
-
+    recover(table, baseDir)
     val incoming = batch.withColumn("__pri", lit(1))
     val tiebreak = incoming.columns.filterNot(c => keys.contains(c) || c == "__pri")
       .map(c => col(c).desc).toSeq
-    val merged =
+    val all =
       if (Files.exists(Paths.get(dest))) {
-        val existing = spark.read.parquet(dest).withColumn("__pri", lit(0))
-        Dedup.keepLatest(incoming.unionByName(existing), keys,
-          col("__pri").desc +: tiebreak)
-      } else {
-        Dedup.keepLatest(incoming, keys, col("__pri").desc +: tiebreak)
-      }
-    merged.drop("__pri").write.mode(SaveMode.Overwrite).parquet(tmp)
-    // swap: the merged plan reads `dest`, so tmp must be fully
-    // materialized first; renaming dest aside (instead of deleting it)
-    // keeps a recoverable copy at every instant of the swap
-    if (Files.exists(Paths.get(dest))) Files.move(Paths.get(dest), Paths.get(old))
-    Files.move(Paths.get(tmp), Paths.get(dest))
-    deleteTree(old)
+        val stored = StructType(batch.schema.map(_.copy(nullable = true)))
+        incoming.unionByName(spark.read.schema(stored).parquet(dest).withColumn("__pri", lit(0)))
+      } else incoming
+    val clustered = if (cluster.isEmpty) all else all.repartition(cluster.map(col): _*)
+    Dedup.keepLatest(clustered, keys, col("__pri").desc +: tiebreak).drop("__pri")
+  }
+
+  /** Write `rows` to `baseDir/.<table>.tmp`, replacing any stale copy; the
+    * table itself is untouched until [[swap]]. */
+  def stage(rows: DataFrame, table: String, baseDir: String): Unit = {
+    recover(table, baseDir)
+    rows.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/.$table.tmp")
+  }
+
+  /** Move a fully written `.<table>.tmp` into place. Renaming the table
+    * aside (instead of deleting it) keeps a recoverable copy at every
+    * instant: a crash between the two moves leaves `.<table>.old`, which
+    * the next [[merge]] or [[stage]] of that table restores. Several
+    * tables may be staged first and swapped after, so that a plan reading
+    * one of them (a merge) is materialized before any of them moves. */
+  def swap(table: String, baseDir: String): Unit = {
+    val dest = Paths.get(s"$baseDir/$table")
+    val old = Paths.get(s"$baseDir/.$table.old")
+    if (Files.exists(dest)) Files.move(dest, old)
+    Files.move(Paths.get(s"$baseDir/.$table.tmp"), dest)
+    deleteTree(old.toString)
+  }
+
+  /** Put back a table whose swap died after the rename-aside (its `.old`
+    * dir is then the authoritative copy) and drop leftover `.old` and
+    * `.tmp` dirs. */
+  private def recover(table: String, baseDir: String): Unit = {
+    val dest = Paths.get(s"$baseDir/$table")
+    val old = s"$baseDir/.$table.old"
+    if (!Files.exists(dest) && Files.exists(Paths.get(old)))
+      Files.move(Paths.get(old), dest)
+    deleteTree(old); deleteTree(s"$baseDir/.$table.tmp")
   }
 
   private def deleteTree(dir: String): Unit = {
@@ -97,12 +131,4 @@ object Router {
       finally walk.close()
     }
   }
-
-  /** Route + upsert each entity frame of a micro-batch. Unroutable frames
-    * are ignored (the reference logs and continues,
-    * `spark-streaming.py:144-147`). */
-  def writeBatch(spark: SparkSession, baseDir: String, frames: Seq[DataFrame]): Unit =
-    frames.foreach { df =>
-      route(df).foreach(table => upsert(spark, df, table, baseDir))
-    }
 }

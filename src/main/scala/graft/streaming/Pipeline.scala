@@ -3,12 +3,12 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.indicators.IndicatorFold
 import graft.ingest.Envelope
 import graft.sink.Router
+import graft.util.Staging
 
 /** The streaming ETL pipeline: envelope source → demux → multiplex upsert
   * sink → indicator derivation. The Spark-native re-expression of the
@@ -23,9 +23,10 @@ import graft.sink.Router
   *   - T7: the reference applies a grouped-map pandas UDF directly on a
   *     streaming DataFrame, which Spark's UnsupportedOperationChecker
   *     rejects — its *intent* is per-trigger indicator recomputation. We
-  *     derive indicators inside `foreachBatch` over the upserted price
-  *     table (one per-series fold, [[deriveIndicators]]), which is legal,
-  *     deterministic, and matches that intent.
+  *     derive indicators inside `foreachBatch` from the same merged price
+  *     rows the price upsert writes (one per-series fold, see
+  *     [[processBatch]]), which is legal, deterministic, and matches that
+  *     intent.
   *
   * The source is a line-delimited JSON file stream (one envelope per
   * line) — the same `value: String` shape a Kafka source yields after the
@@ -61,68 +62,54 @@ object Pipeline {
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 
-  /** One micro-batch: parse → demux → upsert the four entity tables →
-    * re-derive indicators from each touched series' earliest timestamp in
-    * this batch onward ([[deriveIndicators]] with [[changedFrom]]).
+  /** One micro-batch: parse → demux → route and upsert coins, OHLC and
+    * market cap (an unroutable frame is skipped, as the reference logs
+    * and continues, `spark-streaming.py:144-147`) → upsert prices and
+    * indicators together. Each table's jobs run under the description
+    * `processBatch <table>`.
     *
-    * Re-running a batch, whole or after only its entity writes (the
-    * foreachBatch replay after a crash), leaves the same sink: the entity
-    * upserts are idempotent, and the indicator rows the batch can change
-    * are re-derived from the stored prices. */
+    * Prices and indicators share one merge: the batch ∪ the stored prices,
+    * hash-partitioned on (coin_id, exchange) and deduplicated on the PK
+    * ([[Router.merge]]), in one exchange. The merge is persisted and
+    * written to `.price_data.tmp`; the indicators of every series are then
+    * folded over the same cached partitions ([[IndicatorFold.foldSeries]]:
+    * no second exchange, no re-read of `price_data`) into
+    * `.technical_indicators.tmp`, and both tables are swapped in.
+    *
+    * `technical_indicators` is a pure function of `price_data`, equal to
+    * [[graft.indicators.Indicators.withIndicators]] over it exactly
+    * (PipelineExactnessSpec). So re-running a batch after a crash at any
+    * point leaves the same sink: the upserts are idempotent, an
+    * interrupted swap is recovered, and the indicators are re-derived
+    * from the re-merged prices. */
   def processBatch(spark: SparkSession, batch: DataFrame, sinkDir: String,
       mcapTs: Option[Timestamp] = None): Unit = {
     val d = Envelope.demux(Envelope.parse(batch), mcapTs)
-    Router.writeBatch(spark, sinkDir, Seq(d.coins, d.price, d.ohlc, d.marketCap))
-    deriveIndicators(spark, sinkDir, Some(changedFrom(d.price)))
+    def commit(table: String)(body: => Unit): Unit =
+      Staging.phase(spark, s"processBatch $table")(body)
+    for (df <- Seq(d.coins, d.ohlc, d.marketCap); table <- Router.route(df))
+      commit(table)(Router.upsert(spark, df, table, sinkDir))
+    val merged = Router.merge(spark, d.price, "price_data", sinkDir,
+      cluster = Seq("coin_id", "exchange")).persist()
+    try {
+      commit("price_data")(Router.stage(merged, "price_data", sinkDir))
+      commit("technical_indicators")(Router.stage(
+        IndicatorFold.foldSeries(merged).toDF(), "technical_indicators", sinkDir))
+    } finally merged.unpersist()
+    Router.swap("price_data", sinkDir)
+    Router.swap("technical_indicators", sinkDir)
   }
 
-  /** Per (coin_id, exchange) series in a batch's price rows, the earliest
-    * timestamp it carries as `changed_from`; null when any of its rows has
-    * a null timestamp (which sorts first, so the whole series changes). */
-  def changedFrom(price: DataFrame): DataFrame =
-    price.groupBy(col("coin_id"), col("exchange"))
-      .agg(when(count(lit(1)) === count(col("timestamp")), min(col("timestamp")))
-        .as("changed_from"))
-
-  /** T7: derive the indicators from the stored price table and upsert them
-    * into `technical_indicators`.
-    *
-    * Read: the full stored history of every series named in `changed`
-    * (columns coin_id, exchange, changed_from — see [[changedFrom]]), or of
-    * every series when `changed` is None (backfill). The read grows with
-    * the touched series' history, not with the batch.
-    *
-    * Written: each touched series' changed suffix only — its rows at or
-    * after `changed_from`. A row's indicators depend only on its series'
-    * prices at or before it, so every earlier stored row is still exact.
-    * None writes every row.
-    *
-    * Computed by [[IndicatorFold.derive]] in one exchange, sort and fold.
-    * After the upsert, `technical_indicators` equals
-    * [[graft.indicators.Indicators.withIndicators]] over `price_data`
-    * exactly, not within a tolerance (PipelineExactnessSpec).
-    *
-    * [[StatefulIndicators.attach]] folds the same kernel with per-key
-    * state carried by a streaming query; `GroupState` does not survive
-    * across `processBatch` calls, so this path re-reads instead. */
-  def deriveIndicators(spark: SparkSession, sinkDir: String,
-      changed: Option[DataFrame] = None): Unit = {
+  /** Backfill: fold every series of the stored `price_data` and replace
+    * `technical_indicators` with the result (no merge with the stored
+    * indicators), through the same stage-and-swap commit as
+    * [[processBatch]]. */
+  def deriveIndicators(spark: SparkSession, sinkDir: String): Unit = {
     val priceDir = s"$sinkDir/price_data"
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(priceDir))) {
-      val all = spark.read.parquet(priceDir)
-      val (price, from) = changed match {
-        case Some(c) =>
-          val keys = c.select(col("coin_id").as("changed_coin"),
-            col("exchange").as("changed_exchange"), col("changed_from"))
-          // null-safe: a series with a null key is a series too
-          (all.join(broadcast(keys),
-            all("coin_id") <=> keys("changed_coin") &&
-              all("exchange") <=> keys("changed_exchange")),
-            col("changed_from"))
-        case None => (all, lit(null).cast("timestamp"))
-      }
-      Router.upsert(spark, IndicatorFold.derive(price, from).toDF(),
+      Router.stage(IndicatorFold.derive(spark.read.parquet(priceDir)).toDF(),
         "technical_indicators", sinkDir)
+      Router.swap("technical_indicators", sinkDir)
     }
   }
 }

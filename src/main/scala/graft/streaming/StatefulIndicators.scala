@@ -9,10 +9,11 @@ import graft.model.Schemas.{IndicatorRow, PriceTick}
 /** Streaming-native technical indicators: per-key state carried across
   * micro-batches with `flatMapGroupsWithState`.
   *
-  * The incremental counterpart of [[Pipeline.deriveIndicators]], which
-  * re-reads the full stored history of every series a batch touches
-  * (`GroupState` lives in a streaming query, not across `processBatch`
-  * calls). Here each (coin_id, exchange) key holds O(1) state — the last
+  * The incremental counterpart of [[Pipeline.processBatch]], which folds
+  * every series' full history on each batch, over the merged price rows
+  * it rewrites anyway (`GroupState` lives in a streaming query, not
+  * across `processBatch` calls, and the sink stores no EMA state). Here
+  * each (coin_id, exchange) key holds O(1) state — the last
   * 20 prices, three EMA accumulators and the row count — and each
   * arriving tick emits exactly one indicator row, so a batch reads only
   * its own ticks. State size is `#keys × (20 doubles + 4 longs)`,

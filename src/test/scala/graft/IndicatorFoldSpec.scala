@@ -19,8 +19,8 @@ class IndicatorFoldSpec extends SparkSpec {
     Indicators.withIndicators(df, Seq("coin_id", "exchange"), Seq(col("timestamp")), col("price"))
       .select(cols.map(col): _*)
 
-  private def fold(df: DataFrame, from: org.apache.spark.sql.Column): DataFrame =
-    IndicatorFold.derive(df, from).toDF().select(cols.map(col): _*)
+  private def fold(df: DataFrame): DataFrame =
+    IndicatorFold.derive(df).toDF().select(cols.map(col): _*)
 
   private def assertSame(a: DataFrame, b: DataFrame): Unit = {
     assert(a.exceptAll(b).count() === 0)
@@ -69,7 +69,7 @@ class IndicatorFoldSpec extends SparkSpec {
     val df = (1 to 3).flatMap(series).toDF("coin_id", "exchange", "timestamp", "price")
       .repartition(3)
     val expected = window(df)
-    val got = fold(df, lit(null).cast("timestamp"))
+    val got = fold(df)
     assert(got.count() === df.count())
     assertSame(got, expected)
     // the shapes reach every branch: null masks, RSI 0/0, loss = 0, RSI < 100
@@ -79,21 +79,9 @@ class IndicatorFoldSpec extends SparkSpec {
     assert(got.where(col("ema_20").isNull).count() > 0)
   }
 
-  test("a row is emitted from its series' `from` on, with the whole-series values") {
-    val df = series(4).toDF("coin_id", "exchange", "timestamp", "price")
-    // cut each series at its 12th minute; series shorter than that emit nothing
-    val cut = new Timestamp(1700000000000L + 11 * 60000L)
-    val withFrom = df.withColumn("from",
-      when(col("coin_id").endsWith("const"), lit(null).cast("timestamp")).otherwise(lit(cut)))
-    val got = fold(withFrom, col("from"))
-    val expected = window(df)
-      .where(col("coin_id").endsWith("const") || col("timestamp") >= lit(cut))
-    assertSame(got, expected)
-  }
-
   test("an empty input folds to nothing") {
     val df = Seq.empty[Row4].toDF("coin_id", "exchange", "timestamp", "price")
-    assert(fold(df, lit(null).cast("timestamp")).count() === 0)
+    assert(fold(df).count() === 0)
   }
 
   test("restore resumes a series exactly where an uninterrupted fold is") {

@@ -51,6 +51,21 @@ class RouterSpec extends SparkSpec {
     assert(!Files.exists(dir.resolve(".coins.tmp")))
   }
 
+  test("upsert reads the stored table with the batch's schema: a missing column reads as null, a conflicting type fails") {
+    val dir = Files.createTempDirectory("router-schema"); dir.toFile.deleteOnExit()
+    // a stored file written before the table had a `symbol` column
+    Seq(("c1", "One")).toDF("id", "name").write.parquet(s"$dir/coins")
+    Router.upsert(spark, Seq(("c2", "Two", "C2")).toDF("id", "name", "symbol"), "coins", dir.toString)
+    def stored = spark.read.parquet(s"$dir/coins")
+      .as[(String, String, Option[String])].collect().sortBy(_._1).toSeq
+    assert(stored === Seq(("c1", "One", None), ("c2", "Two", Some("C2"))))
+    // `symbol` is stored as a string; a batch carrying it as a double must
+    // not read the stored strings as nulls
+    val conflicting = Seq(("c3", "Three", 3.0)).toDF("id", "name", "symbol")
+    intercept[Exception](Router.upsert(spark, conflicting, "coins", dir.toString))
+    assert(stored.map(_._1) === Seq("c1", "c2"))
+  }
+
   test("property: EMA window function equals the sequential fold, many random series") {
     import org.apache.spark.sql.functions._
     val rng = new scala.util.Random(42)
