@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. A warmup pass (tiny action per input table) runs
   * first so the timings measure query execution, not JVM/codegen/footer
@@ -9,20 +7,15 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // partition-count knob for large-SF runs: at sf10 the 32-partition
     // default puts ~3.5M adjacency rows in one task and the graph loops
     // pay spill I/O for it — 128 halves q_pagerank there (AQE coalesces
     // small stages back down, so over-partitioning costs nothing at
     // sf0.1)
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", LocalSession.cores)
+    val spark = LocalSession.builder()
       .config("spark.sql.shuffle.partitions", shuffleParts)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     // OFF, not ERROR: the driver's tail capture merges stdout+stderr, and
     // an ERROR-level DAGScheduler/Executor shutdown stack trace landed

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-factor multiplier for the harness tables: replicates every table
@@ -48,14 +48,7 @@ object ScaleUp {
     val hubFrac = args.drop(3).find(_.startsWith("--hub="))
       .map(_.drop("--hub=".length).toDouble).getOrElse(0.0)
     require(hubFrac >= 0.0 && hubFrac < 1.0, s"--hub=$hubFrac out of [0,1)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // no repartition on the way out: the replicated frame is already

@@ -1,14 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.functions.call_function
 
 /** Bloom-filter build/probe over Spark's NATIVE Catalyst expressions
   * (`BloomFilterAggregate` / `BloomFilterMightContain` — the same pair
-  * the optimizer's runtime row-level filtering injects), surfaced as
-  * registry functions the way [[VecDot]] is. Zero UDFs: the probe is a
+  * the optimizer's runtime row-level filtering injects), surfaced as the
+  * registry functions `bloom_agg(xxhash64_val, n_items)` and
+  * `bloom_contains(bloom_bytes, xxhash64_val)` the way [[VecDot]] is. Zero UDFs: the probe is a
   * codegen'd expression over an `xxhash64` long, the build is a native
   * TypedImperativeAggregate with map-side partials.
   *
@@ -20,25 +19,9 @@ import org.apache.spark.sql.functions.call_function
   * construction. */
 object Blooms {
 
-  /** Register `bloom_agg(xxhash64_val, n_items)` and
-    * `bloom_contains(bloom_bytes, xxhash64_val)`. The aggregate builder
-    * returns the bare AggregateFunction — the analyzer wraps it, exactly
-    * as it does for built-in registry aggregates. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg",
-      exprs => new BloomFilterAggregate(exprs(0),
-        exprs(1) match { case Literal(n: Long, _) => n; case e => e.eval().asInstanceOf[Number].longValue() }),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_contains",
-      exprs => new BloomFilterMightContain(exprs(0), exprs(1)),
-      "built-in")
-  }
-
   /** Aggregate a column of xxhash64 longs into serialized bloom bytes. */
   def agg(spark: SparkSession, hashed: Column, expectedItems: Long): Column = {
-    register(spark)
+    graft.GraftExtensions.install(spark)
     call_function("bloom_agg", hashed,
       org.apache.spark.sql.functions.lit(expectedItems))
   }
@@ -46,7 +29,7 @@ object Blooms {
   /** Membership probe: `bloom` is a binary column (a literal of collected
     * bloom bytes), `hashed` an xxhash64 long. */
   def mightContain(spark: SparkSession, bloom: Column, hashed: Column): Column = {
-    register(spark)
+    graft.GraftExtensions.install(spark)
     call_function("bloom_contains", bloom, hashed)
   }
 }

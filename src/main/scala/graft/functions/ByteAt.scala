@@ -71,12 +71,8 @@ object ByteAt {
     ByteAt(exprs(0), idx)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "byte_at", build, "built-in")
-
   def apply(spark: SparkSession, p: Column, i: Column): Column = {
-    register(spark)
+    graft.GraftExtensions.install(spark)
     call_function("byte_at", p, i)
   }
 }

@@ -123,14 +123,8 @@ object GearCuts {
     new GenericArrayData(out.toArray)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "gear_cuts", exprs => GearCuts(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]),
-      "built-in")
-
   def apply(spark: SparkSession, text: Column, cutBits: Int): Column = {
-    register(spark)
+    graft.GraftExtensions.install(spark)
     call_function("gear_cuts", text, lit(cutBits))
   }
 }

@@ -83,13 +83,8 @@ case class StrHamming(left: Expression, right: Expression)
 }
 
 object StrHamming {
-  /** Register `str_hamming(a, b)` in the session's function registry. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "str_hamming", exprs => StrHamming(exprs(0), exprs(1)), "built-in")
-
   def apply(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+    graft.GraftExtensions.install(spark)
     call_function("str_hamming", a, b)
   }
 }

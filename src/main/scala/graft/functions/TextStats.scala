@@ -192,12 +192,8 @@ object TextStats {
     0
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "text_stats", exprs => TextStats(exprs(0)), "built-in")
-
   def apply(spark: SparkSession, text: Column): Column = {
-    register(spark)
+    graft.GraftExtensions.install(spark)
     call_function("text_stats", text)
   }
 }

@@ -67,12 +67,8 @@ case class TokCount(child: Expression) extends UnaryExpression {
 }
 
 object TokCount {
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tok_count", exprs => TokCount(exprs(0)), "built-in")
-
   def apply(spark: SparkSession, text: Column): Column = {
-    register(spark)
+    graft.GraftExtensions.install(spark)
     call_function("tok_count", text)
   }
 }

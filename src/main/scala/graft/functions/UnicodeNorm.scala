@@ -101,12 +101,8 @@ object UnicodeNorm {
     case other => UnicodeNorm(exprs(0), s"<non-literal:$other>") // fails type check
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unicode_norm", build, "built-in")
-
   def apply(spark: SparkSession, text: Column, form: String): Column = {
-    register(spark)
+    graft.GraftExtensions.install(spark)
     call_function("unicode_norm", text, org.apache.spark.sql.functions.lit(form))
   }
 }

@@ -109,12 +109,8 @@ object UrlPart {
     case other => UrlPart(exprs(0), s"<non-literal:$other>") // fails type check
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "url_part", build, "built-in")
-
   def apply(spark: SparkSession, url: Column, part: String): Column = {
-    register(spark)
+    graft.GraftExtensions.install(spark)
     call_function("url_part", url, org.apache.spark.sql.functions.lit(part))
   }
 }

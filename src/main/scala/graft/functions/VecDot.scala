@@ -82,15 +82,10 @@ case class VecDot(left: Expression, right: Expression)
 }
 
 object VecDot {
-  /** Register `vec_dot(a, b)` in the session's function registry (the
-    * Column entry point resolves through the registry — see Ewma for why
-    * hand-built Column(expr) trees are avoided). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs(0), exprs(1)), "built-in")
-
+  /** Resolves through the function registry — see [[graft.indicators.Ewma.byAlpha]]
+    * for why hand-built Column(expr) trees are avoided. */
   def apply(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+    graft.GraftExtensions.install(spark)
     call_function("vec_dot", a, b)
   }
 }

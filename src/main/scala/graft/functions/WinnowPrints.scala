@@ -143,14 +143,8 @@ object WinnowPrints {
       prints.size.toLong, hex(prints.first()), hex(prints.last())))
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_prints", exprs => WinnowPrints(exprs(0),
-        exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Int]),
-      "built-in")
-
   def apply(spark: SparkSession, text: Column, k: Int, w: Int): Column = {
-    register(spark)
+    graft.GraftExtensions.install(spark)
     call_function("winnow_prints", text, lit(k), lit(w))
   }
 }

@@ -28,8 +28,9 @@ import org.apache.spark.sql.types.{DataType, Decimal, DoubleType, NumericType}
   *     hash-partition + sort every window function already pays, and it
   *     shares that sort with SMA/RSI/lag computed over the same window
   *     spec (single Window operator in the physical plan).
-  *   - It is SQL-visible: register via `Indicators.register(spark)` and use
-  *     `ewma(value, 0.095) OVER (PARTITION BY k ORDER BY ts)`.
+  *   - It is SQL-visible: `graft.GraftExtensions` catalogues it, so after
+  *     `GraftExtensions.install(spark)` (or with the session extension)
+  *     `ewma(value, 0.095) OVER (PARTITION BY k ORDER BY ts)` works.
   */
 case class Ewma(child: Expression, alphaExpr: Expression)
     extends AggregateWindowFunction with BinaryLike[Expression] {
@@ -88,15 +89,6 @@ case class Ewma(child: Expression, alphaExpr: Expression)
 }
 
 object Ewma {
-  /** Register `ewma(x, alpha)` in the session's function registry. The
-    * Column-side entry points resolve through the registry (like the SQL
-    * path) because the analyzer leaves an `AggregateWindowFunction` as the
-    * direct child of `WindowExpression` only on that path — hand-built
-    * `Column(expr)` trees trip CheckAnalysis's bare-window-function check. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ewma", exprs => Ewma(exprs(0), exprs(1)), "built-in")
-
   /** pandas `ewm(span)` smoothing factor, α = 2/(span+1). */
   def alpha(span: Int): Double = {
     require(span >= 1, s"span must be >= 1, got $span")
@@ -107,8 +99,12 @@ object Ewma {
   def bySpan(spark: SparkSession, col: Column, span: Int): Column =
     byAlpha(spark, col, alpha(span))
 
+  /** Resolves through the function registry (like the SQL path) because
+    * the analyzer leaves an `AggregateWindowFunction` as the direct child
+    * of `WindowExpression` only on that path — hand-built `Column(expr)`
+    * trees trip CheckAnalysis's bare-window-function check. */
   def byAlpha(spark: SparkSession, col: Column, alpha: Double): Column = {
-    register(spark)
+    graft.GraftExtensions.install(spark)
     call_function("ewma", col, lit(alpha))
   }
 }

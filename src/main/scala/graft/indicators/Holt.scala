@@ -91,16 +91,11 @@ case class Holt(child: Expression, alphaExpr: Expression, betaExpr: Expression)
 }
 
 object Holt {
-  /** Register `holt(x, alpha, beta)`; resolves through the registry for
-    * the same CheckAnalysis reason as [[Ewma.register]]. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "holt", exprs => Holt(exprs(0), exprs(1), exprs(2)), "built-in")
-
   /** `holt(col, α, β)` as a Column; apply `.over(Window...orderBy(ts))`.
-    * Returns a (level, trend) struct. */
+    * Returns a (level, trend) struct. Resolves through the registry for
+    * the same CheckAnalysis reason as [[Ewma.byAlpha]]. */
   def apply(spark: SparkSession, col: Column, alpha: Double, beta: Double): Column = {
-    register(spark)
+    graft.GraftExtensions.install(spark)
     call_function("holt", col, lit(alpha), lit(beta))
   }
 }

@@ -144,10 +144,6 @@ object Indicators {
       .drop("__rn", "__sg", "__sl", "__delta")
   }
 
-  /** Register `ewma(x, alpha)` for SQL use:
-    * `SELECT ewma(price, 0.095) OVER (PARTITION BY k ORDER BY ts) ...`. */
-  def register(spark: SparkSession): Unit = Ewma.register(spark)
-
   /** Holt level+trend smoothing per event-type series ([[Holt]]): one
     * shared window spec (one exchange + sort), the coupled two-cell
     * recurrence evaluated incrementally by WindowExec, and a one-step

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -110,12 +110,6 @@ object AsOf {
       .withColumn("match_age_us", when(col("__age_us") <= tolUs, col("__age_us")))
       .drop("__rts_us", "__age_us")
   }
-
-  /** Convenience: enrich with a single renamed payload column. */
-  def joinAsOf1(left: DataFrame, right: DataFrame, keys: Seq[String],
-      leftTs: String, rightTs: String, valueCol: String, as: String): DataFrame =
-    joinAsOf(left, right.withColumnRenamed(valueCol, as),
-      keys, leftTs, rightTs, Seq(as))
 
   /** Forward as-of join: each left row takes the EARLIEST right-side
     * values at-or-after its timestamp per key — the mirror of

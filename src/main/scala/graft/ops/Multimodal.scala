@@ -161,7 +161,7 @@ object Multimodal {
     * [[graft.functions.ByteAt]] expression (codegen'd array load; the
     * conv∘hex∘substr spelling allocates two strings per byte, which a
     * corpus-scale decode pass cannot afford). Resolves through the
-    * function registry; [[graft.functions.ByteAt.register]] must have
+    * function registry; [[graft.GraftExtensions.install]] must have
     * run on the session (the decode entry points do so). */
   private def byteAt(p: Column, i: Column): Column =
     call_function("byte_at", p, i.cast("long"))
@@ -187,7 +187,7 @@ object Multimodal {
     * [[bmpThumb]]: (doc_id, width, height, x, y, r, g, b) in IMAGE
     * coordinates, honoring the 4-byte row stride and bottom-up rows. */
   private def bmpPixels(media: DataFrame): DataFrame = {
-    graft.functions.ByteAt.register(media.sparkSession)
+    graft.GraftExtensions.install(media.sparkSession)
     val p = col("payload")
     val withHdr = media
       .withColumn("magic", hex(substring(p, 1, 2)))
@@ -322,7 +322,7 @@ object Multimodal {
     * [[wavFrames]]: (doc_id, sample_rate, i, s) with signed PCM16
     * reconstruction. */
   private def wavSamples(media: DataFrame): DataFrame = {
-    graft.functions.ByteAt.register(media.sparkSession)
+    graft.GraftExtensions.install(media.sparkSession)
     val p = col("payload")
     media
       .withColumn("riff", hex(p.substr(1, 4)))

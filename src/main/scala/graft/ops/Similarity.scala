@@ -26,17 +26,12 @@ import graft.util.Tables
   */
 object Similarity {
 
-  /** Register the native vector functions in this session's registry.
-    * Idempotent; called by every entry point that builds vector columns. */
-  def register(spark: SparkSession): Unit =
-    graft.functions.VecDot.register(spark)
-
   /** Sum of elementwise products — the codegen'd [[graft.functions.VecDot]]
     * expression (tight primitive loop, no intermediate zipped array, no
     * interpreted lambdas). Same left-to-right accumulation as the HOF form
-    * it replaced, so results are bit-identical. Callers must have
-    * [[register]]ed the session (every public query shape here does via
-    * [[vecs]]). */
+    * it replaced, so results are bit-identical. Callers must have run
+    * [[graft.GraftExtensions.install]] on the session (every public query
+    * shape here does via [[vecs]]). */
   def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
@@ -52,7 +47,7 @@ object Similarity {
 
   /** Embeddings as `array<double>` with the L2 norm materialized. */
   def vecs(spark: SparkSession, dir: String): DataFrame = {
-    register(spark)
+    graft.GraftExtensions.install(spark)
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), x => x.cast("double")).as("v"))

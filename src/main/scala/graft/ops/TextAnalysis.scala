@@ -45,12 +45,6 @@ object TextAnalysis {
     size(filter(toks, t => t.isin(stopwords: _*))).cast("double") / size(toks)
   }
 
-  /** Mean token length: (chars − separators) / tokens. */
-  def avgWordLen(text: Column): Column = {
-    val n = tokenCount(text)
-    (length(text) - (n - 1)).cast("double") / n
-  }
-
   /** Fraction of characters that are punctuation. */
   def punctRatio(text: Column): Column =
     (length(text) - length(regexp_replace(text, "[.,!?;:]", ""))).cast("double") /

@@ -74,20 +74,12 @@ case class DeferredBuildExec(output: Seq[Attribute], label: String,
 
 object Deferred {
 
-  /** Ensure [[DeferredStrategy]] participates in planning for this
-    * session (idempotent — the [[Graft.install]] pattern). */
-  def install(spark: SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(DeferredStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ DeferredStrategy
-  }
-
   /** A DataFrame with `schema` whose rows come from `build()` at first
     * execution. `schema` must match the thunk's result exactly (checked
     * at execution); construction runs zero jobs. */
   def apply(spark: SparkSession, schema: StructType, label: String)(
       build: () => DataFrame): DataFrame = {
-    install(spark)
+    graft.GraftExtensions.install(spark)
     org.apache.spark.sql.graftshim.GraftSqlShim.ofRows(spark,
       DeferredBuild(DataTypeUtils.toAttributes(schema), label, build))
   }

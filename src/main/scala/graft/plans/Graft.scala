@@ -1,18 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
 
 /** User-facing entry to the custom plan nodes. */
 object Graft {
-
-  /** Ensure [[TopKStrategy]] participates in planning for this session
-    * (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(TopKStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ TopKStrategy
-  }
 
   /** Exact top-`k` rows per `keyCols` group, "top" = first in
     * `orderCols` (each (name, descending)); supply a unique tie-break
@@ -33,7 +25,7 @@ object Graft {
     val cap = spark.conf.get(TopKPerKeyExec.MaxKeysConf,
       TopKPerKeyExec.MaxKeysDefault.toString).toLong
     if (distinctKeysHint.exists(_ > cap)) return windowTopK(df, keyCols, orderCols, k)
-    install(spark)
+    graft.GraftExtensions.install(spark)
     val lp = df.queryExecution.analyzed
     def attr(n: String) = lp.output.find(_.name == n).getOrElse(
       sys.error(s"column $n not in ${lp.output.map(_.name)}"))

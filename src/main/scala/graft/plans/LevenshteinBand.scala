@@ -26,10 +26,13 @@ import org.apache.spark.sql.types.IntegerType
   * Negative / degenerate thresholds are left untouched (the rewrite
   * only fires when the implied band is a valid non-negative bound).
   *
-  * Registered via `graft.GraftExtensions` (`injectOptimizerRule`), the
-  * (e) rung of the extension ladder: Expression (VecDot), window
-  * function (Ewma), typed UDAF (ExactMoments), whole operator
-  * (TopKPerKey), DSv2 source (Ticker) — and now a logical rewrite.
+  * Injected from the `graft.GraftExtensions` catalog
+  * (`injectOptimizerRule`) on the session-extension path only —
+  * `GraftExtensions.install` leaves it out, so runtime sessions keep
+  * their plans. The (e) rung of the extension ladder: Expression
+  * (VecDot), window function (Ewma), typed UDAF (ExactMoments), whole
+  * operator (TopKPerKey), DSv2 source (Ticker) — and now a logical
+  * rewrite.
   */
 object LevenshteinBandRule extends Rule[LogicalPlan] {
 

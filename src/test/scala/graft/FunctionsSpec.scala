@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.ExtensionsProbe
 
 import graft.functions.ExactMoments
 import graft.queries.Analytics
@@ -268,5 +271,37 @@ class FunctionsSpec extends SparkSpec {
       .head().getSeq[Long](0)
     // layout: [n | s0 s1 | s00 s01 s11]
     assert(m === Seq(3L, 2L, 11L, 1 + 9 + 4L, 2 + 15 - 8L, 4 + 25 + 16L))
+  }
+
+  private def wrongNumArgs(name: String, expected: Int, actual: Int) =
+    s"`$name` requires $expected parameters but the actual number is $actual"
+
+  test("every catalogued function rejects one argument too few and one too many at analysis") {
+    GraftExtensions.install(spark)
+    for (f <- GraftExtensions.functions; n <- Seq(f.arity - 1, f.arity + 1)) {
+      val e = intercept[AnalysisException](
+        spark.sql(s"SELECT ${f.name}(${Seq.fill(n)("1").mkString(", ")})"))
+      assert(e.getMessage.contains(wrongNumArgs(f.name, f.arity, n)), e.getMessage)
+    }
+  }
+
+  test("GraftExtensions injects exactly the catalog; runtime install adds each strategy once") {
+    val ext = new SparkSessionExtensions
+    new GraftExtensions()(ext)
+    val injected = ExtensionsProbe.functions(ext)
+    assert(injected.listFunction().map(_.funcName).sorted ===
+      GraftExtensions.functions.map(_.name).sorted)
+    assert(ExtensionsProbe.strategies(ext, spark) === GraftExtensions.strategies)
+    assert(ExtensionsProbe.optimizerRules(ext, spark) === GraftExtensions.optimizerRules)
+    GraftExtensions.functions.foreach { f =>
+      val e = intercept[AnalysisException](
+        injected.lookupFunctionBuilder(f.id).get(Seq.fill(f.arity + 1)(Literal(1))))
+      assert(e.getMessage.contains(wrongNumArgs(f.name, f.arity, f.arity + 1)), e.getMessage)
+    }
+    GraftExtensions.install(spark)
+    GraftExtensions.install(spark)
+    val added = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .experimental.extraStrategies
+    assert(GraftExtensions.strategies.map(s => added.count(_ == s)) === Seq(1, 1))
   }
 }

@@ -176,7 +176,7 @@ class IndicatorsSpec extends SparkSpec {
   }
 
   test("holt is SQL-visible and the SQL form matches the Column form") {
-    Holt.register(spark)
+    GraftExtensions.install(spark)
     val df = Seq(("k", 1L, 10.0), ("k", 2L, 14.0), ("k", 3L, 12.0),
       ("j", 1L, 5.0), ("j", 2L, 9.0)).toDF("k", "id", "v")
     df.createOrReplaceTempView("holt_in")

@@ -122,14 +122,14 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("cosine of a vector with itself is 1") {
-    Similarity.register(spark)
+    GraftExtensions.install(spark)
     val df = Seq((Array(1.0, 2.0, 3.0), Array(1.0, 2.0, 3.0))).toDF("a", "b")
     val c = df.select(Similarity.cosine($"a", $"b")).as[Double].head()
     assert(math.abs(c - 1.0) < 1e-12)
   }
 
   test("vec_dot: codegen'd expression matches the HOF form bit-for-bit") {
-    Similarity.register(spark)
+    GraftExtensions.install(spark)
     import org.apache.spark.sql.functions._
     val df = graft.util.Tables.embeddings(spark, sf).limit(200)
       .select(transform(col("embedding"), x => x.cast("double")).as("v"))
