@@ -202,7 +202,7 @@ object SparkEntry {
     "q_pack_sequences" -> ((s, d) => TextAnalysis.packSequences(s, d)),
     "q_bigram_lm" -> (TextAnalysis.bigramLmScore _),
     // interpolated Kneser–Ney trigram: continuation-count backoff
-    "q_kn_trigram" -> (TextAnalysis.knTrigramScore _),
+    "q_kn_trigram" -> ((s, d) => TextAnalysis.knTrigramScore(s, d)),
     // S x S cross-source NLL matrix from one vocab-bounded fan-out
     "q_domain_shift" -> (TextAnalysis.domainShift _),
     "q_domain_reweight" -> ((s, d) => TextAnalysis.domainReweight(s, d)),

@@ -121,44 +121,40 @@ object Dedup {
 
   /** Large-corpus execution guard for the single-plan pair pipelines:
     * when the partition count [[graft.util.Staging.autoPartitions]]
-    * derives from the documents footprint exceeds the session setting,
-    * the plan is wrapped in a [[graft.plans.Deferred]] leaf that runs it
-    * to a staged parquet UNDER that derived count and streams the (tiny,
-    * dup-rate-bounded) pair table back. The r9/sf100 lesson this
-    * encodes: the naive shingle self-join's sort-merge working set is
-    * per-task, so the partition count is the memory knob, and the
-    * recorded sf100 runs only completed at a hand-set 512 — the 1.5 MiB-
-    * per-documents-byte rule derives ~540 at that rung (79 MB sf10
+    * derives from the documents footprint (1.5 MiB of documents parquet
+    * per partition) exceeds the session setting, the plan runs staged
+    * ([[graft.util.Staging.run]]) to one parquet phase UNDER that derived
+    * count and the (tiny, dup-rate-bounded) pair table streams back. The
+    * r9/sf100 lesson this encodes: the naive shingle self-join's
+    * sort-merge working set is per-task, so the partition count is the
+    * memory knob, and the recorded sf100 runs only completed at a
+    * hand-set 512 — the rule derives ~540 at that rung (79 MB sf10
     * derives ~53, the small rungs keep their single lazy plan
     * unchanged). Construction stays analysis-only either way. */
-  private def maybeDeferHeavy(spark: SparkSession, dir: String, label: String,
-      schema: org.apache.spark.sql.types.StructType)(
-      plan: => DataFrame): DataFrame = {
-    // the 1.5 MiB-per-partition rule is overridable so (a) specs can
-    // force the deferred path at fixture scale and (b) an operator
-    // whose cluster profile differs can be re-calibrated without code
-    val bpp = spark.conf.get(
-      "spark.graft.dedup.bytesPerPartition", (1536L << 10).toString).toLong
-    val parts = Staging.autoPartitions(spark,
-      inputBytes(spark, s"$dir/documents.parquet"), bpp)
-    val session = spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
-    if (parts <= session) plan
-    else graft.plans.Deferred(spark, schema, label) { () =>
-      Staging.withShufflePartitions(spark, parts) {
-        val scratch = stageDir(spark,
-          s"${label}_${pathDigest(dir)}_${stageSeq.getAndIncrement()}")
-        plan.write.mode("overwrite").parquet(s"$scratch/out")
-        spark.read.parquet(s"$scratch/out")
-      }
-    }
-  }
+  private def heavyPartitions(spark: SparkSession, dir: String): Int =
+    Staging.autoPartitions(spark,
+      Staging.inputBytes(spark, s"$dir/documents.parquet"), 1536L << 10)
+
+  private def stagesHeavy(spark: SparkSession, dir: String): Boolean =
+    heavyPartitions(spark, dir) >
+      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
+
+  private def guardHeavy(spark: SparkSession, dir: String, label: String,
+      schema: org.apache.spark.sql.types.StructType, staged: Boolean)(
+      plan: => DataFrame): DataFrame =
+    Staging.run(spark, label, schema, staged, heavyPartitions(spark, dir))(_ => plan)
 
   /** [[jaccardPairs]] without the final presentation sort — the form to
     * compose (e.g. as connected-components input), where a global
     * range-partition sort of the pair stream is pure wasted shuffle. */
   def jaccardPairsUnsorted(spark: SparkSession, dir: String,
       tau: Double = 0.8): DataFrame =
-    maybeDeferHeavy(spark, dir, "jaccard_naive", PairSchema) {
+    jaccardPairsUnsorted(spark, dir, tau, stagesHeavy(spark, dir))
+
+  /** [[jaccardPairsUnsorted]] on a chosen medium (`staged`). */
+  private[graft] def jaccardPairsUnsorted(spark: SparkSession, dir: String,
+      tau: Double, staged: Boolean): DataFrame =
+    guardHeavy(spark, dir, "jaccard_naive", PairSchema, staged) {
       jaccardPairsUnsortedPlan(spark, dir, tau)
     }
 
@@ -195,7 +191,12 @@ object Dedup {
     * above the Jaccard threshold to stay selective. */
   def containmentPairs(spark: SparkSession, dir: String,
       tau: Double = 0.9): DataFrame =
-    maybeDeferHeavy(spark, dir, "containment_naive", ContainmentSchema) {
+    containmentPairs(spark, dir, tau, stagesHeavy(spark, dir))
+
+  /** [[containmentPairs]] on a chosen medium (`staged`). */
+  private[graft] def containmentPairs(spark: SparkSession, dir: String,
+      tau: Double, staged: Boolean): DataFrame =
+    guardHeavy(spark, dir, "containment_naive", ContainmentSchema, staged) {
       containmentPairsPlan(spark, dir, tau)
     }.orderBy(col("id_sub"), col("id_super"))
 
@@ -250,7 +251,8 @@ object Dedup {
     * trade [[jaccardPairsPrefix]] documents. */
   def containmentPairsPrefix(spark: SparkSession, dir: String,
       tau: Double = 0.9): DataFrame =
-    maybeDeferHeavy(spark, dir, "containment_prefix", ContainmentSchema) {
+    guardHeavy(spark, dir, "containment_prefix", ContainmentSchema,
+        stagesHeavy(spark, dir)) {
       containmentPairsPrefixPlan(spark, dir, tau)
     }.orderBy(col("id_sub"), col("id_super"))
 
@@ -318,29 +320,28 @@ object Dedup {
     * stages cost more than they save, so the naive form stays the bench
     * default; on a web-scale corpus the selectivity inverts that.
     *
-    * Execution is ADAPTIVE (round 11): below
-    * `spark.graft.ppjoin.stagingMinBytes` (default 256 MiB of documents
-    * parquet — between the sf10 rung that completes un-staged and the
+    * Execution is ADAPTIVE (round 11): below 256 MiB of documents
+    * parquet (between the sf10 rung that completes un-staged and the
     * sf100 rung that does not) the whole prefix pipeline is ONE lazy
-    * plan, analysis-only at construction; above it, the disk-bounded
-    * staged pipeline runs — DEFERRED to first action since r12
-    * ([[graft.plans.Deferred]]), so construction is analysis-only at
-    * EVERY rung and a plan dump against a big corpus runs zero jobs.
-    * The staged phases size their shuffle partitions from the documents
-    * footprint (2 MiB of documents parquet per partition — the 811 MB
-    * sf100 rung derives ~400 where the recorded run hand-set 128; more,
-    * smaller tasks on the same spill volume). `spark.graft.ppjoin
-    * .staging` = on|off overrides the auto choice. */
+    * plan; from there on, the disk-bounded staged pipeline runs as
+    * [[graft.util.Staging.run]] phases, deferred to first action, so
+    * construction is analysis-only at EVERY rung. The staged phases size
+    * their shuffle partitions from the documents footprint (2 MiB of
+    * documents parquet per partition — the 811 MB sf100 rung derives
+    * ~400 where the recorded run hand-set 128; more, smaller tasks on
+    * the same spill volume). */
   def jaccardPairsPrefix(spark: SparkSession, dir: String, tau: Double = 0.8): DataFrame =
-    if (stagingEnabled(spark, dir)) {
-      val parts = Staging.autoPartitions(spark,
-        inputBytes(spark, s"$dir/documents.parquet"), 2L << 20)
-      graft.plans.Deferred(spark, PairSchema, "ppjoin_staged") { () =>
-        Staging.withShufflePartitions(spark, parts) {
-          jaccardPairsPrefixStaged(spark, dir, tau)
-        }
-      }.orderBy(col("id_a"), col("id_b"))
-    } else jaccardPairsPrefixPlan(spark, dir, tau)
+    jaccardPairsPrefix(spark, dir, tau,
+      Staging.inputBytes(spark, s"$dir/documents.parquet") >= (256L << 20))
+
+  /** [[jaccardPairsPrefix]] on a chosen medium (`staged`). */
+  private[graft] def jaccardPairsPrefix(spark: SparkSession, dir: String,
+      tau: Double, staged: Boolean): DataFrame =
+    if (staged)
+      Staging.run(spark, "ppjoin", PairSchema, stage = true, Staging.autoPartitions(
+        spark, Staging.inputBytes(spark, s"$dir/documents.parquet"), 2L << 20))(
+        jaccardPairsPrefixStaged(_, spark, dir, tau)).orderBy(col("id_a"), col("id_b"))
+    else jaccardPairsPrefixPlan(spark, dir, tau)
 
   /** (id_a, id_b, jac) — the near-dup pair schema every Jaccard-family
     * operator emits. */
@@ -348,15 +349,6 @@ object Dedup {
     .add("id_a", org.apache.spark.sql.types.LongType)
     .add("id_b", org.apache.spark.sql.types.LongType)
     .add("jac", org.apache.spark.sql.types.DoubleType)
-
-  private def stagingEnabled(spark: SparkSession, dir: String): Boolean =
-    Staging.stagingEnabled(spark, "spark.graft.ppjoin.staging",
-      "spark.graft.ppjoin.stagingMinBytes", s"$dir/documents.parquet")
-
-  /** On-disk size of one input path (0 if absent) — the staging decision
-    * reads parquet footprint, never row counts, so it costs no job. */
-  private[ops] def inputBytes(spark: SparkSession, path: String): Long =
-    Staging.inputBytes(spark, path)
 
   /** Single-plan prefix pipeline for inputs whose spill fits the disk
     * budget (the r9 form, kept as the small-input path: ~4 s vs the
@@ -391,25 +383,15 @@ object Dedup {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  private def jaccardPairsPrefixStaged(spark: SparkSession, dir: String, tau: Double): DataFrame = {
+  private def jaccardPairsPrefixStaged(p: Staging.Phases, spark: SparkSession,
+      dir: String, tau: Double): DataFrame = {
     // STAGED to parquet, one phase per materialization, because one
     // mega-plan re-spills the shingle stream per consumer: the round-9
     // sf100 attempt died at ~430 s with "No space left on device" when
     // the persisted stream (DISK_ONLY serialized rows), the freq join,
     // the per-doc rank window, the candidate DISTINCT and the verify
-    // sorts all held spill simultaneously. Writing each phase's output
-    // as compressed columnar parquet and reading it back caps peak disk
-    // at (shingle parquet) + (one phase's own shuffle spill) — each
-    // phase's scratch is freed before the next runs. On a cluster the
-    // same staging is checkpoint()/exchange-reuse; the parquet spelling
-    // is also restart-friendly (phases are idempotent overwrites).
-    // The slot is keyed by a digest of the ABSOLUTE input path (not
-    // String.hashCode — 32-bit collisions between two dirs would silently
-    // cross-wire their staged candidates) plus a per-construction
-    // sequence number, so two interleaved constructions on the same
-    // input can never overwrite each other's phases.
-    val scratch = stageDir(spark,
-      s"ppjoin_${pathDigest(dir)}_${tau}_${stageSeq.getAndIncrement()}")
+    // sorts all held spill simultaneously. As phases, peak disk is
+    // (shingle parquet) + (one phase's own shuffle spill).
     // shingle stream with IN-ROW cardinality (size of the distinct gram
     // array, materialized once per row by the three-projection spelling
     // — CollapseProject never inlines the non-cheap gram lambda into
@@ -427,17 +409,11 @@ object Dedup {
     // stream carries ONLY (doc_id, c, h): the true shingles are
     // rebuilt in-row from `documents` at verification time, so no
     // string column ever sits on disk between phases.
-    locally {
-      val withArr = spread(Tables.documents(spark, dir))
-        .select(col("doc_id"), shingleArray(col("text")).as("arr"))
-      withArr
-        .select(col("doc_id"), size(col("arr")).as("c"), col("arr"))
-        .select(col("doc_id"), col("c"), explode(col("arr")).as("s"))
-        .select(col("doc_id"), col("c"), xxhash64(col("s")).as("h"))
-        .write.mode("overwrite").parquet(s"$scratch/shh")
-    }
-    drainPhaseShuffles(spark)
-    val shh = spark.read.parquet(s"$scratch/shh")
+    val shh = p.stage("shh", spread(Tables.documents(spark, dir))
+      .select(col("doc_id"), shingleArray(col("text")).as("arr"))
+      .select(col("doc_id"), size(col("arr")).as("c"), col("arr"))
+      .select(col("doc_id"), col("c"), explode(col("arr")).as("s"))
+      .select(col("doc_id"), col("c"), xxhash64(col("s")).as("h")))
     val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("f"), col("h"))
     // ceil over double arithmetic can round tau*c to just ABOVE an exact
     // integer (e.g. 0.7*10 = 7.000000000000001 → ceil 8), which would
@@ -452,45 +428,28 @@ object Dedup {
     // disk (~2 full-stream copies + the window's sort spill), which is
     // exactly the 66 GB overage the sf100 attempts kept dying of;
     // phase-split, each holds ONE full-stream exchange at a time
-    locally {
-      shh.groupBy(col("h")).agg(count(lit(1)).as("f"))
-        .write.mode("overwrite").parquet(s"$scratch/freq")
-    }
-    drainPhaseShuffles(spark)
-    locally {
-      shh.hint("merge")
-        .join(spark.read.parquet(s"$scratch/freq"), "h")
-        .write.mode("overwrite").parquet(s"$scratch/joined")
-    }
-    drainPhaseShuffles(spark)
+    val freq = p.stage("freq", shh.groupBy(col("h")).agg(count(lit(1)).as("f")))
+    val joined = p.stage("joined", shh.hint("merge").join(freq, "h"))
     // the hashed stream and frequency table are consumed — free their
     // parquet BEFORE the window phase, whose exchange + sort spill is
     // the single largest disk moment of the pipeline (attempt 4 died
     // here ~10 GB short with them still on disk)
-    rmStage(s"$scratch/shh"); rmStage(s"$scratch/freq")
-    locally {
-      spark.read.parquet(s"$scratch/joined")
-        .withColumn("rn", row_number().over(wDoc))
-        .filter(col("rn") <= col("c") - ceilSafe(lit(tau) * col("c")) + 1)
-        .select(col("doc_id"), col("c"), col("h"))
-        .write.mode("overwrite").parquet(s"$scratch/prefix")
-    }
-    drainPhaseShuffles(spark)
-    rmStage(s"$scratch/joined")
-    val prefix = spark.read.parquet(s"$scratch/prefix")
-    prefix.hint("merge").as("a")
+    p.drop("shh", "freq")
+    val prefix = p.stage("prefix", joined
+      .withColumn("rn", row_number().over(wDoc))
+      .filter(col("rn") <= col("c") - ceilSafe(lit(tau) * col("c")) + 1)
+      .select(col("doc_id"), col("c"), col("h")))
+    p.drop("joined")
+    val cand = p.stage("cand", prefix.hint("merge").as("a")
       .join(prefix.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id") &&
           // size filter: J >= tau forces tau*|A| <= |B| and tau*|B| <= |A|
           col("b.c") >= ceilSafe(lit(tau) * col("a.c")) &&
           col("a.c") >= ceilSafe(lit(tau) * col("b.c")))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
-      .write.mode("overwrite").parquet(s"$scratch/cand")
-    drainPhaseShuffles(spark)
+      .distinct())
     // the prefix stream is consumed — free it before verification
-    rmStage(s"$scratch/prefix")
-    val cand = spark.read.parquet(s"$scratch/cand")
+    p.drop("prefix")
     // verification only needs the TRUE shingles of docs that appear in
     // some candidate pair (dup-rate bounded) — rebuilt in-row from
     // `documents` behind the semi-join prune, so the corpus-scale
@@ -504,31 +463,11 @@ object Dedup {
     val candSh = candDocs
       .select(col("doc_id"), size(col("arr")).as("c"), col("arr"))
       .select(col("doc_id"), col("c"), explode(col("arr")).as("s"))
-    // verification lands as the pipeline's final phase (the lazy-return
-    // spelling would execute it LATER, outside the caller's partition
-    // scope, at whatever the session count is); the verified pair table
-    // is dup-rate-bounded — a small parquet. Presentation order is the
-    // caller's.
-    locally {
-      verifyPairs(cand.hint("merge"), candSh, tau)
-        .write.mode("overwrite").parquet(s"$scratch/pairs")
-    }
-    rmStage(s"$scratch/cand")
-    spark.read.parquet(s"$scratch/pairs")
+    // verification lands as the run's final phase, inside its partition
+    // scope; the verified pair table is dup-rate-bounded — a small
+    // parquet. Presentation order is the caller's.
+    verifyPairs(cand.hint("merge"), candSh, tau)
   }
-
-  // Phase-staging helpers (rmStage / drainPhaseShuffles / stageDir /
-  // pathDigest / stageSeq) were built here for the sf100 ppjoin pipeline
-  // and now live in [[graft.util.Staging]], shared with the graph
-  // iteration loops and the KN-trigram scorer. Local aliases keep the
-  // call sites unchanged.
-  private def rmStage(path: String): Unit = Staging.rmStage(path)
-  private def drainPhaseShuffles(spark: SparkSession): Unit =
-    Staging.drainPhaseShuffles(spark)
-  private def stageSeq = Staging.stageSeq
-  private def pathDigest(dir: String): String = Staging.pathDigest(dir)
-  private def stageDir(spark: SparkSession, slot: String): String =
-    Staging.stageDir(spark, slot)
 
   /** Census-driven selection between the naive shingle self-join
     * ([[jaccardPairs]]) and the prefix-filtered form
@@ -555,7 +494,7 @@ object Dedup {
   def prefixPathWins(spark: SparkSession, dir: String,
       sampleCap: Long = 20000L, overheadFactor: Double = 8.0): Boolean =
     chooserCache.computeIfAbsent(
-      s"${pathDigest(dir)}_${sampleCap}_$overheadFactor", _ => {
+      s"${new java.io.File(dir).getAbsolutePath}_${sampleCap}_$overheadFactor", _ => {
         val docs = Tables.documents(spark, dir)
         val n = docs.count()
         if (n == 0) java.lang.Boolean.FALSE

@@ -62,10 +62,8 @@ object DupSpans {
     // threshold the distributed path is unchanged. Both paths produce
     // identical ranks up to order-isomorphism, hence identical output
     // (DupSpansSpec pins equality).
-    val smallBytes = spark.conf.get(
-      "spark.graft.dupspan.smallBytes", (64L << 20).toString).toLong
     val small = graft.util.Staging.inputBytes(
-      spark, s"$dir/documents.parquet") < smallBytes
+      spark, s"$dir/documents.parquet") < (64L << 20)
     longestDupSpanFromDocs(
       Tables.documents(spark, dir)
         .repartition(spark.sparkContext.defaultParallelism), small)

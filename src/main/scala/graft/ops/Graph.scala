@@ -176,12 +176,9 @@ object Graph {
     * Scale shape: one shuffle-on-`src` join (ranks into the
     * degree-annotated adjacency, pre-materialized once) plus one
     * map-side-combinable groupBy(`dst`) per iteration — the Pregel
-    * dataflow without a graph framework. Lineage is truncated each
-    * round; on a cluster, `checkpoint` + co-partitioning `adj` and
-    * `ranks` on the same hash keeps every iteration's join narrow.
-    * Callers must pass edges where every node has out-degree >= 1
-    * (e.g. symmetrized edges); dangling-mass redistribution is
-    * deliberately out of scope.
+    * dataflow without a graph framework. Callers must pass edges where
+    * every node has out-degree >= 1 (e.g. symmetrized edges);
+    * dangling-mass redistribution is deliberately out of scope.
     *
     * Lineage is truncated every `checkpointEvery` rounds rather than
     * every round: a handful of join+agg rounds is a shallow plan that
@@ -189,173 +186,55 @@ object Graph {
     * periodic cut to keep plan growth (and recovery cost on a real
     * cluster) bounded. */
   def pageRank(edges: DataFrame, iters: Int = 3,
-      checkpointEvery: Int = 5): DataFrame = {
-    // pin the edge list once — deg, adj and the rank init all read it,
-    // and an unpinned lineage would re-derive it (e.g. the
-    // orders⋈lineitem distinct) three times. persist, NOT
-    // localCheckpoint: the SQL cache stores compressed columnar batches
-    // and spills per-block, while localCheckpoint unrolls raw
-    // deserialized rows — at sf10 that unroll alone (110M-edge
-    // adjacency, one oversized partition after AQE coalescing) was a
-    // JVM-killing OOM
-    val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
-    // adj is hash-partitioned on src ONCE and pinned; every iteration's
-    // join then reuses that layout and only the (much smaller) rank
-    // table moves — the invariant-side co-location every Pregel-style
-    // loop needs at scale
-    val adj = e.join(deg, "src").repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks = deg.select(col("src").as("node"), lit(1000000L).as("pr"))
-    for (i <- 1 to iters) {
+      checkpointEvery: Int = 5): DataFrame =
+    Staging.run(edges.sparkSession, "pagerank", GraphStateSchema("pr"),
+      stage = false, 0)(pageRankPhases(_, edges, iters, checkpointEvery))
+
+  /** [[pageRank]] on either [[Staging]] medium. Staged, it is shaped for
+    * the rung where the single-plan form dies of disk: with the whole
+    * loop in one plan, every iteration's join + aggregate shuffle stays
+    * referenced until the final action, so ~1.2B-edge graphs accumulate
+    * 3 iterations × ~12 GB of spill ON TOP of the adjacency persist (the
+    * recorded sf100 DNF). As phases, peak disk is ONE iteration's shuffle
+    * plus the staged edge/rank parquet (ranks are one small row per
+    * node), and the adjacency is a bucketed table on the join key: each
+    * iteration moves only the rank table, and the |E|-row side crosses
+    * the wire exactly once. */
+  private def pageRankPhases(p: Staging.Phases, edges: DataFrame,
+      iters: Int, checkpointEvery: Int): DataFrame = {
+    // staged: the construction shuffles (orders⋈lineitem + distinct) are
+    // freed before iteration spill starts, and every later phase runs at
+    // a partition count derived from the staged edges' footprint — the
+    // r11 label-prop twin proved the partition count is the MEMORY knob
+    // for these 1e9-edge rounds (DNF at 128, pass at a hand-set 512)
+    val e = p.stage("edges", edges)
+    p.resize("edges", GraphBytesPerPartition)
+    // degree annotation as a window over the adjacency's own exchange by
+    // src. The aggregate+join spelling paid the same exchange PLUS a deg
+    // aggregate and a join (profiled 68.7 s vs 12.7 s for label-prop's
+    // join-free adjacency on the same staged volume).
+    val adj = p.keyed("pr_adj", e, "src", _.withColumn("d",
+        count(lit(1)).over(Window.partitionBy(col("src"))))
+      .select(col("src"), col("dst"), col("d")))
+    p.drop("edges")
+    // iters == 0 degenerates to the constant starting rank
+    p.rounds("ranks", iters, checkpointEvery)(adj.select(col("src").as("node"))
+        .distinct().select(col("node"), lit(1000000L).as("pr"))) { (i, ranks) =>
       // iteration 1 needs no rank join: every starting rank is the
-      // constant 1e6 (and ranks0 covers exactly the adjacency's src
+      // constant 1e6 (and the start covers exactly the adjacency's src
       // set), so the contribution is `1000000 div d` straight off the
-      // adjacency row — algebraically identical to joining ranks0,
-      // minus one join per query
+      // adjacency row — algebraically identical to joining the start,
+      // minus one join (and, staged, one phase) per query
       val contribs =
         if (i == 1) adj.select(col("dst"), expr("1000000 div d").as("c"))
         else adj.join(ranks, adj("src") === ranks("node"))
           .select(col("dst"), expr("pr div d").as("c"))
-      ranks = contribs
+      contribs
         .groupBy(col("dst"))
         .agg(sum(col("c")).as("s"))
         .select(col("dst").as("node"),
           (lit(150000L) + expr("(85 * s) div 100")).as("pr"))
-      if (i % checkpointEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
     }
-    ranks
-  }
-
-  /** Phase-staged PageRank — output-identical to [[pageRank]] (every
-    * step is the same exact integer arithmetic), resource-shaped for the
-    * rung where the single-plan form dies of disk: with the whole loop
-    * in one plan, every iteration's join + aggregate shuffle stays
-    * referenced until the final action, so ~1.2B-edge graphs accumulate
-    * 3 iterations × ~12 GB of spill ON TOP of the adjacency persist (the
-    * recorded sf100 DNF). Here each phase ends at a parquet write, the
-    * phase's plan references die with its scope, and
-    * [[Staging.drainPhaseShuffles]] returns the spill before the next
-    * phase starts — peak disk is ONE iteration's shuffle plus the staged
-    * edge/rank parquet (ranks are one small row per node). The adjacency
-    * is re-read from compressed parquet per iteration instead of being
-    * persisted: a deliberate trade — the re-exchange is linear and
-    * predictable, while a 1.2B-row block-manager pin is exactly what
-    * blew the execution-memory budget on the label-prop twin. On a
-    * cluster the same phases are reliable checkpoints, and the pinned
-    * adjacency would come back as a bucketed table co-partitioned with
-    * the rank state. */
-  def pageRankStaged(spark: SparkSession, edges: DataFrame, iters: Int,
-      slot: String): DataFrame = {
-    val seq = Staging.stageSeq.getAndIncrement()
-    val scratch = Staging.stageDir(spark, s"pagerank_${slot}_$seq")
-    // phase E: materialize the edge list once; the construction shuffles
-    // (orders⋈lineitem + distinct) are freed before iteration spill starts
-    Staging.phase(spark, "pagerank: stage edges") {
-      edges.write.mode("overwrite").parquet(s"$scratch/edges")
-    }
-    Staging.drainPhaseShuffles(spark)
-    // every phase from here on runs at a partition count derived from
-    // the staged edge parquet's own footprint (8 MiB of compressed edge
-    // parquet per partition): the r11 label-prop twin proved the session
-    // partition count is the MEMORY knob for these 1e9-edge rounds (DNF
-    // at 128, pass at a hand-set 512), and a staged pipeline is exactly
-    // where the input bytes are known before the heavy shuffles start —
-    // no user should ever need the magic number
-    val parts = Staging.autoPartitions(spark,
-      Staging.inputBytes(spark, s"$scratch/edges"), GraphBytesPerPartition)
-    val adjTbl = s"graft_pr_adj_${slot}_$seq"
-    val finalRanks = Staging.withShufflePartitions(spark, parts) {
-      // phase A: degree-annotated adjacency as a BUCKETED table on the
-      // iteration join key. Through r11 the adjacency was plain parquet
-      // and every iteration's join re-exchanged all |E| rows by src —
-      // the dominant per-iteration shuffle (the r11 close named bucketed
-      // adjacency as the cluster remedy). Bucket metadata makes the scan
-      // itself hash-partitioned(src, parts), so each iteration only
-      // moves the one-row-per-node rank table; the |E|-row side crosses
-      // the wire exactly once, here. sortBy(src) + one file per bucket
-      // (the repartition in stageBucketed) also hands the sort-merge
-      // join a pre-sorted big side.
-      Staging.phase(spark, "pagerank: bucketed adjacency") {
-        // degree annotation as a window over the bucket layout itself:
-        // one exchange by src feeds the count-per-src window, the
-        // bucket-aligned repartition inside stageBucketed collapses into
-        // it (same expr, same count), and the write's sortBy(src) reuses
-        // the window sort. The aggregate+join spelling this replaces
-        // paid the same exchange PLUS a deg aggregate and a sort-merge
-        // join (profiled 68.7 s vs 12.7 s for label-prop's join-free
-        // twin on the same staged volume).
-        val e = spark.read.parquet(s"$scratch/edges")
-        stageBucketed(spark,
-          e.repartition(parts, col("src"))
-            .withColumn("d", count(lit(1)).over(
-              org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-            .select(col("src"), col("dst"), col("d")),
-          "src", parts, s"$scratch/adj", adjTbl, preAligned = true)
-      }
-      Staging.drainPhaseShuffles(spark)
-      Staging.rmStage(s"$scratch/edges")
-      // no init-ranks phase: iteration 1 reads the constant starting
-      // rank straight off the adjacency (see pageRank — identical
-      // algebra), so the staged loop starts one phase and one |V|-row
-      // parquet earlier. iters == 0 degenerates to the init table.
-      var ranksPath = s"$scratch/ranks0"
-      if (iters == 0) Staging.phase(spark, "pagerank: init ranks") {
-        spark.table(adjTbl)
-          .select(col("src").as("node")).distinct()
-          .select(col("node"), lit(1000000L).as("pr"))
-          .write.mode("overwrite").parquet(ranksPath)
-      }
-      for (i <- 1 to iters) {
-        val next = s"$scratch/ranks$i"
-        Staging.phase(spark, s"pagerank: iteration $i") {
-          val adj = spark.table(adjTbl)
-          val contribs =
-            if (i == 1) adj.select(col("dst"), expr("1000000 div d").as("c"))
-            else adj.join(spark.read.parquet(ranksPath),
-                adj("src") === col("node"))
-              .select(col("dst"), expr("pr div d").as("c"))
-          contribs
-            .groupBy(col("dst"))
-            .agg(sum(col("c")).as("s"))
-            .select(col("dst").as("node"),
-              (lit(150000L) + expr("(85 * s) div 100")).as("pr"))
-            .write.mode("overwrite").parquet(next)
-        }
-        if (i > 1) Staging.rmStage(ranksPath)
-        ranksPath = next
-        Staging.drainPhaseShuffles(spark)
-      }
-      spark.sql(s"DROP TABLE IF EXISTS $adjTbl")
-      Staging.rmStage(s"$scratch/adj")
-      ranksPath
-    }
-    spark.read.parquet(finalRanks)
-  }
-
-  /** Write `df` as an external parquet table bucketed AND sorted on
-    * `key` with exactly one file per bucket (the repartition keys rows
-    * to buckets with the same murmur3-pmod the bucketing metadata
-    * records, so each write task holds exactly one bucket). A scan of
-    * the result reports hashpartitioning(key, parts) and per-bucket
-    * sort order — a join on `key` then needs NO exchange and NO sort on
-    * this side (LayoutSpec proves the mechanism; GraphSpec asserts it
-    * for the iteration loops). External table at `path`: DROP TABLE
-    * leaves the files for rmStage to reclaim with the rest of the
-    * scratch dir. */
-  private[graft] def stageBucketed(spark: SparkSession, df: DataFrame,
-      key: String, parts: Int, path: String, table: String,
-      preAligned: Boolean = false): Unit = {
-    // preAligned: caller already established hashpartitioning(key, parts)
-    // (e.g. to feed a window on the same key) — the bucket-id function is
-    // the same murmur3-pmod, so a second repartition would be a pure
-    // duplicate exchange the optimizer will not remove
-    val aligned = if (preAligned) df else df.repartition(parts, col(key))
-    aligned
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(parts, key).sortBy(key)
-      .option("path", path)
-      .saveAsTable(table)
   }
 
   /** Graph-family partition sizing: 8 MiB of compressed edge parquet per
@@ -368,48 +247,44 @@ object Graph {
     * always ran at. */
   private val GraphBytesPerPartition: Long = 8L << 20
 
-  /** Auto|on|off staging knob for the trade-graph iteration loops
-    * ([[tradeRank]], [[labelPropagation]]), sized on the lineitem
-    * parquet footprint: the un-staged forms complete comfortably at
-    * sf10 (~1.1 GB of lineitem) and die at sf100 (~11 GB) — threshold
-    * 4 GiB sits between the rungs. */
-  private def graphStagingEnabled(spark: SparkSession, dir: String): Boolean =
-    Staging.stagingEnabled(spark, "spark.graft.graph.staging",
-      "spark.graft.graph.stagingMinBytes", s"$dir/lineitem.parquet", 4L << 30)
+  /** The trade-graph loops ([[tradeRank]], [[labelPropagation]]) stage
+    * from 4 GiB of lineitem parquet: the in-memory forms complete
+    * comfortably at sf10 (~1.1 GB of lineitem) and die at sf100
+    * (~11 GB). */
+  private def stagesTradeGraph(spark: SparkSession, dir: String): Boolean =
+    Staging.inputBytes(spark, s"$dir/lineitem.parquet") >= (4L << 30)
 
-  /** PageRank over the customer↔supplier trade graph: an (undirected)
-    * edge per distinct customer–supplier pair that shares an order.
-    * Node ids: customer c → 2c, supplier s → 2s+1 (disjoint spaces).
-    * High-rank nodes are the hub traders — the entity-importance pass
-    * of a graph-shaped pipeline. */
-  def tradeRank(spark: SparkSession, dir: String): DataFrame = {
-    val e0 = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
+  /** The directed customer→supplier trade edges: one per distinct
+    * customer–supplier pair that shares an order. Node ids: customer
+    * c → 2c, supplier s → 2s+1 (disjoint spaces). */
+  private def tradeEdges(spark: SparkSession, dir: String): DataFrame =
+    Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey")),
         col("o_orderkey") === col("l_orderkey"))
       .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
       .distinct()
+
+  /** PageRank over the (undirected) customer↔supplier trade graph
+    * ([[tradeEdges]] both ways). High-rank nodes are the hub traders —
+    * the entity-importance pass of a graph-shaped pipeline. */
+  def tradeRank(spark: SparkSession, dir: String): DataFrame =
+    tradeRank(spark, dir, stagesTradeGraph(spark, dir))
+
+  /** [[tradeRank]] on a chosen medium (`staged`). The staged edge-
+    * generation phase, before any staged footprint exists, sizes its
+    * partitions from the lineitem parquet the edges derive from. */
+  private[graft] def tradeRank(spark: SparkSession, dir: String,
+      staged: Boolean): DataFrame = {
+    val e0 = tradeEdges(spark, dir)
     val bi = e0.unionAll(e0.select(col("dst").as("src"), col("src").as("dst")))
-    val pr =
-      if (graphStagingEnabled(spark, dir))
-        // DEFERRED: construction stays analysis-only (plan dumps run
-        // zero jobs); the phases fire at first action. The edge-
-        // generation phase (orders⋈lineitem + distinct, BEFORE any
-        // staged footprint exists) sizes its partitions from the
-        // lineitem parquet the edges derive from; later phases re-derive
-        // from their own staged bytes inside pageRankStaged.
-        graft.plans.Deferred(spark, GraphStateSchema("pr"), "pagerank_staged") {
-          () =>
-            Staging.withShufflePartitions(spark, edgePhasePartitions(spark, dir)) {
-              pageRankStaged(spark, bi, iters = 3, Staging.pathDigest(dir))
-            }
-        }
-      else pageRank(bi, iters = 3)
-    pr.orderBy(col("node"))
+    Staging.run(spark, "pagerank", GraphStateSchema("pr"), staged,
+      edgePhasePartitions(spark, dir))(
+      pageRankPhases(_, bi, iters = 3, checkpointEvery = 5))
+      .orderBy(col("node"))
   }
 
-  /** Output schema of the staged graph loops' per-node state table —
-    * (node, `valueCol`), both int64 (parquet long on the staged path,
-    * the same types the in-memory twins produce). */
+  /** Output schema of the graph loops' per-node state table —
+    * (node, `valueCol`), both int64. */
   private def GraphStateSchema(valueCol: String) =
     new org.apache.spark.sql.types.StructType()
       .add("node", org.apache.spark.sql.types.LongType)
@@ -443,142 +318,62 @@ object Graph {
     * per-node argmax via max(struct(votes, -label)). State per round is
     * one row per node; lineage truncated per round. */
   def labelPropagation(spark: SparkSession, dir: String,
-      rounds: Int = 3): DataFrame = {
-    val e0 = Tables.orders(spark, dir).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(spark, dir).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-    val lbl =
-      if (graphStagingEnabled(spark, dir))
-        // deferred like tradeRank's staged branch — see there
-        graft.plans.Deferred(spark, GraphStateSchema("community"),
-            "labelprop_staged") { () =>
-          Staging.withShufflePartitions(spark, edgePhasePartitions(spark, dir)) {
-            labelPropRoundsStaged(spark, e0, rounds, Staging.pathDigest(dir))
-          }
-        }
-      else labelPropRounds(e0, rounds)
-    lbl.orderBy(col("node"))
-  }
+      rounds: Int = 3): DataFrame =
+    labelPropagation(spark, dir, rounds, stagesTradeGraph(spark, dir))
 
-  /** Phase-staged LPA — output-identical to [[labelPropRounds]] (same
-    * synchronous rounds, same integer argmax tie-break), resource-shaped
-    * like [[pageRankStaged]]: the recorded sf100 DNF here was EXECUTION
-    * memory, not disk — the 1.2B-row symmetrized adjacency pinned in the
-    * block manager plus a round's join/aggregate working set overran the
-    * unified memory pool. Staging removes the pin entirely (adjacency is
-    * re-read from compressed parquet each round) and caps disk at one
-    * round's shuffle, so both failure axes are bounded by a single
-    * round's working set. */
-  def labelPropRoundsStaged(spark: SparkSession, edges: DataFrame,
-      rounds: Int, slot: String): DataFrame = {
-    val seq = Staging.stageSeq.getAndIncrement()
-    val scratch = Staging.stageDir(spark, s"labelprop_${slot}_$seq")
-    // phase E: the DIRECTED edge list first (pageRankStaged's shape; the
-    // old form staged the symmetrized bi directly, whose unionAll
-    // computed the orders⋈lineitem derivation twice in one job)
-    Staging.phase(spark, "labelprop: stage edges") {
-      edges.write.mode("overwrite").parquet(s"$scratch/edges")
-    }
-    Staging.drainPhaseShuffles(spark)
-    // partition count derived from the staged edges' footprint (x2: bi
-    // is the symmetrized double) — the rung where this loop recorded its
-    // sf100 DNF was EXACTLY a partition-count knife edge
-    // (UNABLE_TO_ACQUIRE_MEMORY at 128 in the 1.17B-group vote round,
-    // pass at a hand-set 512); the staged bytes are the honest size
-    // signal and they are known here, before any heavy shuffle starts
-    val parts = Staging.autoPartitions(spark,
-      2L * Staging.inputBytes(spark, s"$scratch/edges"), GraphBytesPerPartition)
-    val biTbl = s"graft_lp_bi_${slot}_$seq"
-    val finalLabels = Staging.withShufflePartitions(spark, parts) {
-      // phase A: the symmetrized adjacency as a BUCKETED table on the
-      // vote-round join key (dst) — see pageRankStaged: the per-round
-      // |E|-row exchange becomes a bucket-partitioned scan, and only
-      // the one-row-per-node label table moves each round
-      Staging.phase(spark, "labelprop: bucketed adjacency") {
-        val e = spark.read.parquet(s"$scratch/edges")
-        stageBucketed(spark,
-          e.unionAll(e.select(col("dst").as("src"), col("src").as("dst"))),
-          "dst", parts, s"$scratch/bi", biTbl)
-      }
-      Staging.drainPhaseShuffles(spark)
-      Staging.rmStage(s"$scratch/edges")
-      // no init-labels phase: round 1 degenerates to min(neighbor) (see
-      // labelPropRounds — identical algebra), so the staged loop skips
-      // the identity-label parquet and the first round's join outright.
-      // rounds == 0 degenerates to the init table.
-      var labelsPath = s"$scratch/labels0"
-      if (rounds == 0) Staging.phase(spark, "labelprop: init labels") {
-        spark.table(biTbl)
-          .select(col("src").as("node")).distinct()
-          .select(col("node"), col("node").as("lbl"))
-          .write.mode("overwrite").parquet(labelsPath)
-      }
-      for (r <- 1 to rounds) {
-        val next = s"$scratch/labels$r"
-        Staging.phase(spark, s"labelprop: round $r") {
-          val bi = spark.table(biTbl)
-          val stepped =
-            if (r == 1) bi.groupBy(col("src"))
-              .agg(min(col("dst")).as("lbl"))
-              .select(col("src").as("node"), col("lbl"))
-            else {
-              val labels = spark.read.parquet(labelsPath)
-              bi.join(labels, bi("dst") === labels("node"))
-                .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("votes"))
-                .groupBy(col("src"))
-                .agg(max(struct(col("votes"), (-col("lbl")).as("nl"))).as("m"))
-                .select(col("src").as("node"), (-col("m.nl")).as("lbl"))
-            }
-          stepped.write.mode("overwrite").parquet(next)
-        }
-        if (r > 1) Staging.rmStage(labelsPath)
-        labelsPath = next
-        Staging.drainPhaseShuffles(spark)
-      }
-      spark.sql(s"DROP TABLE IF EXISTS $biTbl")
-      Staging.rmStage(s"$scratch/bi")
-      labelsPath
-    }
-    spark.read.parquet(finalLabels)
-      .select(col("node"), col("lbl").as("community"))
-  }
+  /** [[labelPropagation]] on a chosen medium (`staged`); partitioned like
+    * [[tradeRank]]'s. */
+  private[graft] def labelPropagation(spark: SparkSession, dir: String,
+      rounds: Int, staged: Boolean): DataFrame =
+    Staging.run(spark, "labelprop", GraphStateSchema("community"), staged,
+      edgePhasePartitions(spark, dir))(
+      labelPropPhases(_, tradeEdges(spark, dir), rounds))
+      .orderBy(col("node"))
 
   /** The LPA core over directed edges (src, dst); symmetrized here.
     * Returns (node, community) after `rounds` synchronous rounds. */
-  def labelPropRounds(edges: DataFrame, rounds: Int): DataFrame = {
-    // adjacency pinned on the join key (dst) once (columnar persist —
-    // see pageRank for why not localCheckpoint); only the one-row-per-
-    // node label table moves through each round's join
-    val bi = edges.unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = bi.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-    var prevRound: Option[DataFrame] = None
-    for (r <- 1 to rounds) {
-      // round 1 needs no label join: labels0 is the identity and bi is
+  def labelPropRounds(edges: DataFrame, rounds: Int): DataFrame =
+    Staging.run(edges.sparkSession, "labelprop", GraphStateSchema("community"),
+      stage = false, 0)(labelPropPhases(_, edges, rounds))
+
+  /** [[labelPropRounds]] on either [[Staging]] medium. Staged, it is
+    * shaped like [[pageRankPhases]]: the recorded sf100 DNF here was
+    * EXECUTION memory, not disk — the 1.2B-row symmetrized adjacency
+    * pinned in the block manager plus a round's join/aggregate working
+    * set overran the unified memory pool. The bucketed adjacency removes
+    * the pin and phases cap disk at one round's shuffle, so both failure
+    * axes are bounded by a single round's working set. */
+  private def labelPropPhases(p: Staging.Phases, edges: DataFrame,
+      rounds: Int): DataFrame = {
+    // staged: the DIRECTED edges first (staging the symmetrized union
+    // directly would derive the edges twice in one job), and partitions
+    // sized for the symmetrized double: 4 MiB of directed edges = 8 MiB
+    // of adjacency each — the rung where this loop recorded its sf100
+    // DNF was EXACTLY a partition-count knife edge
+    val e = p.stage("edges", edges)
+    p.resize("edges", GraphBytesPerPartition / 2)
+    // adjacency pinned on the vote-round join key (dst) once; only the
+    // one-row-per-node label table moves through each round's join
+    val bi = p.keyed("lp_bi",
+      e.unionAll(e.select(col("dst").as("src"), col("src").as("dst"))), "dst")
+    p.drop("edges")
+    // rounds == 0 degenerates to the identity labels
+    p.rounds("labels", rounds)(bi.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("lbl"))) { (r, labels) =>
+      // round 1 needs no label join: the start is the identity and bi is
       // distinct, so every neighbor casts exactly one vote for its own
       // id — argmax by (votes=1, -label) degenerates to min(neighbor).
       // One map-side-combinable aggregate replaces the round's join plus
       // the (src,label) vote count; rounds 2+ run the generic form.
-      labels =
-        if (r == 1) bi.groupBy(col("src"))
-          .agg(min(col("dst")).as("lbl"))
-          .select(col("src").as("node"), col("lbl"))
-        else bi.join(labels, bi("dst") === labels("node"))
-          .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("votes"))
-          .groupBy(col("src"))
-          .agg(max(struct(col("votes"), (-col("lbl")).as("nl"))).as("m"))
-          .select(col("src").as("node"), (-col("m.nl")).as("lbl"))
-      if (r < rounds) {
-        labels = labels.localCheckpoint()
-        // round r-1's label blocks are dead once round r materialized
-        prevRound.foreach(Staging.freeCheckpoints(_))
-        prevRound = Some(labels)
-      }
-    }
-    labels.select(col("node"), col("lbl").as("community"))
+      if (r == 1) bi.groupBy(col("src"))
+        .agg(min(col("dst")).as("lbl"))
+        .select(col("src").as("node"), col("lbl"))
+      else bi.join(labels, bi("dst") === labels("node"))
+        .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("votes"))
+        .groupBy(col("src"))
+        .agg(max(struct(col("votes"), (-col("lbl")).as("nl"))).as("m"))
+        .select(col("src").as("node"), (-col("m.nl")).as("lbl"))
+    }.select(col("node"), col("lbl").as("community"))
   }
 
   /** Exact per-node triangle counts of an undirected graph, by

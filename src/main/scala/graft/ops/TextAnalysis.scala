@@ -764,21 +764,26 @@ object TextAnalysis {
     * the heavy stream. The cheapest possible plan while the model fits
     * an executor.
     *
-    * Large rung (`spark.graft.text.staging` auto-selects above
-    * `stagingMinBytes` of documents parquet, default 256 MiB — between
-    * the sf10 rung, which completes un-staged, and the sf100 rung,
-    * which died of accumulated shuffle disk): with a replica-suffixed
+    * Large rung (from 256 MiB of documents parquet — between the sf10
+    * rung, which completes un-staged, and the sf100 rung, which died of
+    * accumulated shuffle disk): with a replica-suffixed
     * vocabulary the model tables grow WITH the corpus, the joins become
     * sort-merge, and dragging the full (doc_id, trigram, cnt) stream
     * through five exchanges is 5× the heavy shuffle. Scoring is then
     * factored through the CORPUS-DISTINCT trigram set — P3 is a
     * function of (w1,w2,w3) alone given the model — so the five model
     * joins run over narrow distinct-trigram rows and the per-doc stream
-    * pays exactly ONE gram-keyed join back. The pipeline is phase-staged
-    * [[graft.util.Staging]]-style (per-doc stream, c3, scored table) so
-    * peak disk is one phase's spill + the compressed stages instead of
+    * pays exactly ONE gram-keyed join back. The pipeline runs as
+    * [[graft.util.Staging.run]] phases (per-doc stream, c3, scored table)
+    * so peak disk is one phase's spill + the compressed stages instead of
     * the sum of eight shuffles. */
-  def knTrigramScore(spark: SparkSession, dir: String): DataFrame = {
+  def knTrigramScore(spark: SparkSession, dir: String): DataFrame =
+    knTrigramScore(spark, dir,
+      Staging.inputBytes(spark, s"$dir/documents.parquet") >= (256L << 20))
+
+  /** [[knTrigramScore]] on a chosen medium (`staged`). */
+  private[graft] def knTrigramScore(spark: SparkSession, dir: String,
+      staged: Boolean): DataFrame = {
     val toks = tokens(col("text"))
     val n = size(toks)
     val len = greatest(n - 2, lit(0))
@@ -794,8 +799,6 @@ object TextAnalysis {
         col("t.w2").as("w2"), col("t.w3").as("w3"))
       .groupBy(col("doc_id"), col("w1"), col("w2"), col("w3"))
       .agg(count(lit(1)).as("cnt"))
-    val staged = Staging.stagingEnabled(spark, "spark.graft.text.staging",
-      "spark.graft.text.stagingMinBytes", s"$dir/documents.parquet")
     if (!staged) {
       val c3 = knTrigramC3(docTri0)
       val (c3x, cc2, cc2x, cc1, tots) = knTrigramModel(c3)
@@ -812,50 +815,24 @@ object TextAnalysis {
             sum(col("cnt")).cast("double"), 6).as("kn_logprob"))
         .orderBy(col("doc_id"))
     } else {
-      // DEFERRED (r12): through r11 the phases below ran eagerly at
-      // DataFrame construction — a plan dump against a big corpus
-      // silently executed the full pipeline. Construction is now
-      // analysis-only; phases fire at first action. Partition count is
-      // derived from the documents footprint (4 MiB of documents
-      // parquet per partition: the 811 MB sf100 rung derives ~200 where
-      // the recorded run needed a hand-set 128 — margin, no knob).
+      // partitions derived from the documents footprint (4 MiB of
+      // documents parquet per partition: the 811 MB sf100 rung derives
+      // ~200 where the recorded run needed a hand-set 128 — margin)
       val outSchema = new org.apache.spark.sql.types.StructType()
         .add("doc_id", org.apache.spark.sql.types.LongType)
         .add("n_tri", org.apache.spark.sql.types.LongType)
         .add("kn_logprob", org.apache.spark.sql.types.DoubleType)
-      val parts = Staging.autoPartitions(spark,
-        Staging.inputBytes(spark, s"$dir/documents.parquet"), 4L << 20)
-      graft.plans.Deferred(spark, outSchema, "kn_trigram_staged") { () =>
-        Staging.withShufflePartitions(spark, parts) {
-          val scratch = Staging.stageDir(spark,
-            s"kntri_${Staging.pathDigest(dir)}_${Staging.stageSeq.getAndIncrement()}")
-          locally {
-            docTri0.write.mode("overwrite").parquet(s"$scratch/doctri")
-          }
-          Staging.drainPhaseShuffles(spark)
-          val docTri = spark.read.parquet(s"$scratch/doctri")
-          locally {
-            knTrigramC3(docTri).write.mode("overwrite").parquet(s"$scratch/c3")
-          }
-          Staging.drainPhaseShuffles(spark)
-          locally {
-            knTrigramScoredTris(docTri, spark.read.parquet(s"$scratch/c3"))
-              .write.mode("overwrite").parquet(s"$scratch/scored")
-          }
-          Staging.drainPhaseShuffles(spark)
-          Staging.rmStage(s"$scratch/c3")
-          // the per-doc join back is itself corpus-scale — it must run
-          // INSIDE the partition scope (a lazy return would execute it
-          // later at the session count), so it lands as the final phase
-          locally {
-            knTrigramFinal(docTri, spark.read.parquet(s"$scratch/scored"))
-              .write.mode("overwrite").parquet(s"$scratch/final")
-          }
-          Staging.rmStage(s"$scratch/doctri")
-          Staging.rmStage(s"$scratch/scored")
-          spark.read.parquet(s"$scratch/final").orderBy(col("doc_id"))
-        }
-      }
+      Staging.run(spark, "kn_trigram", outSchema, stage = true,
+        Staging.autoPartitions(spark,
+          Staging.inputBytes(spark, s"$dir/documents.parquet"), 4L << 20)) { p =>
+        val docTri = p.stage("doctri", docTri0)
+        val c3 = p.stage("c3", knTrigramC3(docTri))
+        val scored = p.stage("scored", knTrigramScoredTris(docTri, c3))
+        p.drop("c3")
+        // the per-doc join back is itself corpus-scale: as the run's
+        // final phase it executes inside the partition scope
+        knTrigramFinal(docTri, scored)
+      }.orderBy(col("doc_id"))
     }
   }
 

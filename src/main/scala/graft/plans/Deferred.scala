@@ -14,11 +14,13 @@ import org.apache.spark.sql.types.StructType
   * construction.
   *
   * Why this exists: the phase-staged heavies (PPJoin, the graph
-  * iteration loops, the KN-trigram scorer) cannot be spelled as one
-  * lazy plan at their largest rungs — each phase must land in parquet
-  * and release its shuffle files before the next starts, which means
-  * running jobs. Through round 11 those pipelines ran EAGERLY AT
-  * CONSTRUCTION above the staging threshold (a documented deviation):
+  * iteration loops, the KN-trigram scorer, the Dedup heavy guard)
+  * cannot be spelled as one lazy plan at their largest rungs — each
+  * phase must land in parquet and release its shuffle files before the
+  * next starts, which means running jobs. Their staged medium
+  * ([[graft.util.Staging.run]], chosen from input bytes) returns this
+  * leaf. Through round 11 those pipelines ran EAGERLY AT CONSTRUCTION
+  * above the staging threshold (a documented deviation):
   * merely building the DataFrame — a plan dump, an analysis-only
   * inspection — silently executed corpus-scale jobs. This node restores
   * the repo's analysis-only convention: construction materializes

@@ -72,22 +72,16 @@ class DedupSpec extends SparkSpec {
 
   test("staged prefix pipeline equals the naive join; scratch honors spark.graft.stage.root") {
     val root = java.nio.file.Files.createTempDirectory("graftstage")
-    spark.conf.set("spark.graft.ppjoin.staging", "on")
     spark.conf.set("spark.graft.stage.root", root.toString)
     try {
-      val staged = Dedup.jaccardPairsPrefix(spark, sf)
+      val staged = Dedup.jaccardPairsPrefix(spark, sf, 0.8, staged = true)
         .as[(Long, Long, Double)].collect().toSeq
       val naive = Dedup.jaccardPairs(spark, sf)
         .as[(Long, Long, Double)].collect().toSeq
       assert(staged === naive)
       // the staged phases must have landed under the configured root
-      val slots = Option(root.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith("graft_stage_ppjoin_"))
-      assert(slots.nonEmpty, s"no stage slot under $root")
-    } finally {
-      spark.conf.set("spark.graft.ppjoin.staging", "auto")
-      spark.conf.unset("spark.graft.stage.root")
-    }
+      assertStagedCleanup(root, "ppjoin")
+    } finally spark.conf.unset("spark.graft.stage.root")
   }
 
   test("hub-mass census picks naive on a hub-free corpus, prefix on a hubbed one") {

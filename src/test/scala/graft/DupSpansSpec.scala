@@ -75,8 +75,8 @@ class DupSpansSpec extends SparkSpec {
 
   test("small (single-partition window) path equals the distributed path") {
     // the same brute-force corpus plus the edge-case fixtures, run under
-    // small=true — the path q_longest_dup_span takes below the
-    // spark.graft.dupspan.smallBytes threshold (r12: dense_rank windows
+    // small=true — the path q_longest_dup_span takes below 64 MiB of
+    // documents parquet (r12: dense_rank windows
     // replace the per-round distinct+range-sort+join machinery)
     val rnd = new scala.util.Random(42)
     val texts = (0L until 40L).map { d =>

@@ -94,33 +94,28 @@ class GraphSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graftgstage")
     val plainPr = Graph.tradeRank(spark, sf).as[(Long, Long)].collect().toSeq
     val plainLp = Graph.labelPropagation(spark, sf).as[(Long, Long)].collect().toSeq
-    spark.conf.set("spark.graft.graph.staging", "on")
     spark.conf.set("spark.graft.stage.root", root.toString)
     try {
-      val stagedPr = Graph.tradeRank(spark, sf).as[(Long, Long)].collect().toSeq
-      val stagedLp = Graph.labelPropagation(spark, sf).as[(Long, Long)].collect().toSeq
+      val stagedPr = Graph.tradeRank(spark, sf, staged = true)
+        .as[(Long, Long)].collect().toSeq
+      val stagedLp = Graph.labelPropagation(spark, sf, 3, staged = true)
+        .as[(Long, Long)].collect().toSeq
       // integer arithmetic end to end -> bit-identical, not just close
       assert(stagedPr === plainPr)
       assert(stagedLp === plainLp)
-      val slots = Option(root.toFile.listFiles()).getOrElse(Array.empty)
-        .map(_.getName)
-      assert(slots.exists(_.startsWith("graft_stage_pagerank_")), s"no pagerank slot under $root")
-      assert(slots.exists(_.startsWith("graft_stage_labelprop_")), s"no labelprop slot under $root")
-    } finally {
-      spark.conf.set("spark.graft.graph.staging", "auto")
-      spark.conf.unset("spark.graft.stage.root")
-    }
+      assertStagedCleanup(root, "pagerank", "labelprop")
+    } finally spark.conf.unset("spark.graft.stage.root")
   }
 
   test("stageBucketed: the iteration-loop join reads the adjacency with no exchange and no sort") {
-    // the exact join shape pageRankStaged/labelPropRoundsStaged run per
-    // round: bucketed-sorted adjacency scan ⋈ small state table. Only the
+    // the exact join shape the staged graph loops run per round: bucketed-sorted adjacency scan ⋈ small state table. Only the
     // state side may exchange (and sort); the |E|-row side must be a bare
     // bucketed scan — the whole point of writing it bucketed once.
     val dir = java.nio.file.Files.createTempDirectory("graftbkt")
     val adj = (0L until 200L).map(i => (i % 50, i, i % 7 + 1))
       .toDF("src", "dst", "d")
-    Graph.stageBucketed(spark, adj, "src", 8, s"$dir/adj", "graft_spec_adj")
+    graft.util.Staging.stageBucketed(spark, adj.repartition(8, col("src")), "src", 8,
+      s"$dir/adj", "graft_spec_adj")
     try {
       val scan = spark.table("graft_spec_adj")
       val ranks = (0L until 50L).map(i => (i, 1000000L)).toDF("node", "pr")
@@ -143,7 +138,7 @@ class GraphSpec extends SparkSpec {
       assert(files.length === 8, s"expected 8 bucket files, got ${files.length}")
     } finally {
       spark.sql("DROP TABLE IF EXISTS graft_spec_adj")
-      graft.util.Staging.rmStage(dir.toString)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
 

@@ -8,7 +8,7 @@ import graft.util.Staging
 
 /** The r12 partition-sizing and conf-hygiene machinery: autoPartitions'
   * derivation rule, withShufflePartitions' restore discipline, and the
-  * strict on|off|auto parsing the r11 ADVICE asked for. */
+  * analysis-only construction of the staged medium. */
 class StagingSpec extends SparkSpec {
 
   test("autoPartitions: never below the session value, bytes-derived above it, capped") {
@@ -22,15 +22,6 @@ class StagingSpec extends SparkSpec {
     assert(derived == math.max(session, 1024), derived.toString)
     // hard cap
     assert(Staging.autoPartitions(spark, 1L << 50, 1L) == 4096)
-    // off -> session value regardless of bytes
-    spark.conf.set("spark.graft.autoShufflePartitions", "off")
-    try assert(Staging.autoPartitions(spark, 1L << 40, 1L) == session)
-    finally spark.conf.unset("spark.graft.autoShufflePartitions")
-    // unrecognized value fails loudly, not silently-auto
-    spark.conf.set("spark.graft.autoShufflePartitions", "yes")
-    try intercept[IllegalArgumentException] {
-      Staging.autoPartitions(spark, 1L, 1L)
-    } finally spark.conf.unset("spark.graft.autoShufflePartitions")
   }
 
   test("withShufflePartitions scopes the conf and restores it even on failure") {
@@ -44,26 +35,6 @@ class StagingSpec extends SparkSpec {
       Staging.withShufflePartitions(spark, 23) { sys.error("boom") }
     }
     assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
-  }
-
-  test("stagingEnabled: strict on|off|auto parsing, descriptive minBytes errors") {
-    val k = "spark.graft.spec.staging"; val mk = "spark.graft.spec.stagingMinBytes"
-    spark.conf.set(k, "on")
-    assert(Staging.stagingEnabled(spark, k, mk, "/nonexistent"))
-    spark.conf.set(k, "Off") // case-insensitive
-    assert(!Staging.stagingEnabled(spark, k, mk, "/nonexistent"))
-    spark.conf.set(k, "true") // NOT silently auto (the r11 ADVICE bug)
-    val e = intercept[IllegalArgumentException] {
-      Staging.stagingEnabled(spark, k, mk, "/nonexistent")
-    }
-    assert(e.getMessage.contains("on|off|auto"), e.getMessage)
-    spark.conf.set(k, "auto")
-    spark.conf.set(mk, "not-a-number")
-    val e2 = intercept[IllegalArgumentException] {
-      Staging.stagingEnabled(spark, k, mk, "/nonexistent")
-    }
-    assert(e2.getMessage.contains("byte count"), e2.getMessage)
-    spark.conf.unset(k); spark.conf.unset(mk)
   }
 
   test("staged graph loops and the dedup heavy guard construct analysis-only (zero jobs)") {
@@ -81,14 +52,12 @@ class StagingSpec extends SparkSpec {
           heavy.add(s"job ${s.jobId}: ${s.stageInfos.size} stages, $tasks tasks"): Unit
       }
     }
-    spark.conf.set("spark.graft.graph.staging", "on")
-    spark.conf.set("spark.graft.dedup.bytesPerPartition", "1")
     spark.sparkContext.addSparkListener(listener)
     try {
-      val pr = graft.ops.Graph.tradeRank(spark, sf)
-      val lp = graft.ops.Graph.labelPropagation(spark, sf)
-      val jac = graft.ops.Dedup.jaccardPairsUnsorted(spark, sf)
-      val cp = graft.ops.Dedup.containmentPairs(spark, sf)
+      val pr = graft.ops.Graph.tradeRank(spark, sf, staged = true)
+      val lp = graft.ops.Graph.labelPropagation(spark, sf, 3, staged = true)
+      val jac = graft.ops.Dedup.jaccardPairsUnsorted(spark, sf, 0.8, staged = true)
+      val cp = graft.ops.Dedup.containmentPairs(spark, sf, 0.9, staged = true)
       // all four are deferred leaves on the heavy path
       for (df <- Seq(pr, lp, jac, cp)) {
         val plan = df.queryExecution.explainString(
@@ -103,14 +72,9 @@ class StagingSpec extends SparkSpec {
       // and the deferred heavy guard returns the same rows as the plain
       // plan (collect triggers the staged build)
       val viaGuard = jac.orderBy("id_a", "id_b").collect().toSeq
-      spark.conf.unset("spark.graft.dedup.bytesPerPartition")
       val plain = graft.ops.Dedup.jaccardPairs(spark, sf).collect().toSeq
       assert(viaGuard == plain)
       assert(plain.nonEmpty)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.conf.set("spark.graft.graph.staging", "auto")
-      spark.conf.unset("spark.graft.dedup.bytesPerPartition")
-    }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

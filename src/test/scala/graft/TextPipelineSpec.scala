@@ -615,13 +615,15 @@ class TextPipelineSpec extends SparkSpec {
   test("KN trigram: staged pipeline equals the single-plan form") {
     val plain = TextAnalysis.knTrigramScore(spark, sf)
       .as[(Long, Long, Double)].collect().toSeq
-    spark.conf.set("spark.graft.text.staging", "on")
+    val root = java.nio.file.Files.createTempDirectory("graftkstage")
+    spark.conf.set("spark.graft.stage.root", root.toString)
     try {
-      val staged = TextAnalysis.knTrigramScore(spark, sf)
+      val staged = TextAnalysis.knTrigramScore(spark, sf, staged = true)
         .as[(Long, Long, Double)].collect().toSeq
       assert(staged === plain)
       assert(plain.nonEmpty)
-    } finally spark.conf.set("spark.graft.text.staging", "auto")
+      assertStagedCleanup(root, "kn_trigram")
+    } finally spark.conf.unset("spark.graft.stage.root")
   }
 
   test("KN trigram: proper distribution (all logprobs < 0), train docs score above held-out") {
