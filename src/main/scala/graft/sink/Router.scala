@@ -1,7 +1,11 @@
 package graft.sink
 
-import java.nio.file.{Files, Paths}
+import java.io.File
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -24,11 +28,14 @@ import graft.ops.Dedup
   * keep one probe per table and document rather than reproduce the dead
   * code.
   *
-  * Scale notes: this local implementation rewrites the table because the
-  * harness storage is plain parquet. At cluster scale the same semantics
-  * are a MERGE INTO / dynamic-partition-overwrite keyed by
-  * (key-hash bucket, date): the union+keepLatest plan is unchanged, only
-  * the final write targets the partitions that received keys.
+  * One commit per batch: a batch stages each table it writes to
+  * `baseDir/.<table>.tmp` ([[stage]]); [[commit]] then atomically writes
+  * the record `baseDir/_commit` naming them, installs each (delete
+  * `<table>`, move its `.tmp` into place) and deletes the record.
+  * [[recover]] resolves a crash: with no record the batch never committed,
+  * and its stray `.tmp`s (a torn record among them) are deleted; with the
+  * record, each listed table was fully staged before it was written, so
+  * every one whose `.tmp` is left is installed.
   */
 object Router {
 
@@ -39,6 +46,8 @@ object Router {
     "ohlc_data" -> Seq("coin_id", "exchange", "timestamp", "timeframe"),
     "technical_indicators" -> Seq("coin_id", "exchange", "timestamp"),
     "coin_market_cap" -> Seq("coin_symbol", "timestamp"))
+
+  private val Record = "_commit" // one staged table per line
 
   /** Column-presence probe → table name (K1). */
   def route(df: DataFrame): Option[String] = {
@@ -51,33 +60,24 @@ object Router {
     else None
   }
 
-  /** Upsert `batch` into `baseDir/<table>`: last-write-wins on the PK,
-    * newer batch beats stored rows on exact PK collision; within one
-    * batch, ties on the PK are broken deterministically by the remaining
-    * columns (descending) so re-running the same input stores the same
-    * row regardless of partition order.
+  /** The rows a commit of `batch` into `baseDir/<table>` stores:
+    * last-write-wins on the PK, newer batch beats stored rows on exact PK
+    * collision; within one batch, ties on the PK are broken
+    * deterministically by the remaining columns (descending) so re-running
+    * the same input stores the same row regardless of partition order.
     *
     * The stored table is read with the batch's schema, every column made
     * nullable, so no footer-inference job runs: a stored file missing a
     * column reads that column as null, and a stored column whose type
-    * conflicts with the batch's fails the upsert. */
-  def upsert(spark: SparkSession, batch: DataFrame, table: String,
-      baseDir: String): Unit = {
-    stage(merge(spark, batch, table, baseDir), table, baseDir)
-    swap(table, baseDir)
-  }
-
-  /** The rows [[upsert]] would store: `batch` ∪ the stored table, one row
-    * per PK. With `cluster` (a prefix of the PK) the union is first
-    * hash-partitioned on those columns; that partitioning satisfies the
-    * dedup window, so the plan has that one exchange and its output stays
-    * clustered on `cluster` and sorted by the PK within each partition.
-    * Recovers the table from an interrupted swap before reading it. */
+    * conflicts with the batch's fails the stage. With `cluster` (a prefix
+    * of the PK) the union is first hash-partitioned on those columns; that
+    * partitioning satisfies the dedup window, so the plan has that one
+    * exchange and its output stays clustered on `cluster` and sorted by
+    * the PK within each partition. */
   def merge(spark: SparkSession, batch: DataFrame, table: String, baseDir: String,
       cluster: Seq[String] = Nil): DataFrame = {
     val keys = TableKeys(table)
     val dest = s"$baseDir/$table"
-    recover(table, baseDir)
     val incoming = batch.withColumn("__pri", lit(1))
     val tiebreak = incoming.columns.filterNot(c => keys.contains(c) || c == "__pri")
       .map(c => col(c).desc).toSeq
@@ -91,44 +91,45 @@ object Router {
   }
 
   /** Write `rows` to `baseDir/.<table>.tmp`, replacing any stale copy; the
-    * table itself is untouched until [[swap]]. */
-  def stage(rows: DataFrame, table: String, baseDir: String): Unit = {
-    recover(table, baseDir)
+    * table itself is untouched until [[commit]]. */
+  def stage(rows: DataFrame, table: String, baseDir: String): Unit =
     rows.write.mode(SaveMode.Overwrite).parquet(s"$baseDir/.$table.tmp")
+
+  /** Install the staged `tables` as one unit (see above). */
+  def commit(baseDir: String, tables: Seq[String]): Unit = {
+    writeRecord(baseDir, tables)
+    tables.foreach(install(baseDir, _))
+    clearRecord(baseDir)
   }
 
-  /** Move a fully written `.<table>.tmp` into place. Renaming the table
-    * aside (instead of deleting it) keeps a recoverable copy at every
-    * instant: a crash between the two moves leaves `.<table>.old`, which
-    * the next [[merge]] or [[stage]] of that table restores. Several
-    * tables may be staged first and swapped after, so that a plan reading
-    * one of them (a merge) is materialized before any of them moves. */
-  def swap(table: String, baseDir: String): Unit = {
-    val dest = Paths.get(s"$baseDir/$table")
-    val old = Paths.get(s"$baseDir/.$table.old")
-    if (Files.exists(dest)) Files.move(dest, old)
-    Files.move(Paths.get(s"$baseDir/.$table.tmp"), dest)
-    deleteTree(old.toString)
-  }
-
-  /** Put back a table whose swap died after the rename-aside (its `.old`
-    * dir is then the authoritative copy) and drop leftover `.old` and
-    * `.tmp` dirs. */
-  private def recover(table: String, baseDir: String): Unit = {
-    val dest = Paths.get(s"$baseDir/$table")
-    val old = s"$baseDir/.$table.old"
-    if (!Files.exists(dest) && Files.exists(Paths.get(old)))
-      Files.move(Paths.get(old), dest)
-    deleteTree(old); deleteTree(s"$baseDir/.$table.tmp")
-  }
-
-  private def deleteTree(dir: String): Unit = {
-    val p = Paths.get(dir)
-    if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
+  /** Finish or discard an interrupted [[commit]] (see above). */
+  def recover(baseDir: String): Unit = {
+    val record = Paths.get(baseDir, Record)
+    if (Files.exists(record)) {
+      Files.readAllLines(record).asScala.filter(t => Files.exists(Paths.get(baseDir, s".$t.tmp")))
+        .foreach(install(baseDir, _))
+      clearRecord(baseDir)
     }
+    Option(new File(baseDir).listFiles()).toSeq.flatten
+      .filter(f => f.getName.startsWith(".") && f.getName.endsWith(".tmp"))
+      .foreach(FileUtils.forceDelete)
   }
+
+  /** Write the record to `._commit.tmp` and move it into place atomically,
+    * so a crash leaves either no record or the whole one. */
+  private[graft] def writeRecord(baseDir: String, tables: Seq[String]): Unit = {
+    val tmp = Paths.get(baseDir, s".$Record.tmp")
+    Files.write(tmp, tables.asJava)
+    Files.move(tmp, Paths.get(baseDir, Record), StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** Replace `baseDir/<table>` with its staged `.tmp`. */
+  private[graft] def install(baseDir: String, table: String): Unit = {
+    val dest = Paths.get(baseDir, table)
+    if (Files.exists(dest)) FileUtils.forceDelete(dest.toFile)
+    Files.move(Paths.get(baseDir, s".$table.tmp"), dest)
+  }
+
+  private[graft] def clearRecord(baseDir: String): Unit =
+    Files.deleteIfExists(Paths.get(baseDir, Record))
 }

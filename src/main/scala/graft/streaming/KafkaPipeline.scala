@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ingest.Envelope
 
@@ -47,12 +47,7 @@ object KafkaPipeline {
       // project the payload off the wire columns; the binary→string cast
       // (P1) happens inside Envelope.parse
       .select(col("value"))
-    val writer = raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Pipeline.processBatch(spark, batch, sinkDir, mcapTs)
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    Pipeline.run(spark, raw, sinkDir, checkpointDir, availableNow, mcapTs)
   }
 
   /** K3 producer sink: pack price rows into JSON envelopes (C7,

@@ -52,8 +52,13 @@ object Pipeline {
       sinkDir: String,
       checkpointDir: String,
       availableNow: Boolean = false,
-      mcapTs: Option[Timestamp] = None): StreamingQuery = {
-    val raw = spark.readStream.text(sourceDir)
+      mcapTs: Option[Timestamp] = None): StreamingQuery =
+    run(spark, spark.readStream.text(sourceDir), sinkDir, checkpointDir, availableNow, mcapTs)
+
+  /** Run `processBatch` over each micro-batch of `raw`, a stream with an
+    * envelope `value` column; every source starts the query here. */
+  private[streaming] def run(spark: SparkSession, raw: DataFrame, sinkDir: String,
+      checkpointDir: String, availableNow: Boolean, mcapTs: Option[Timestamp]): StreamingQuery = {
     val writer = raw.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -62,10 +67,10 @@ object Pipeline {
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 
-  /** One micro-batch: parse → demux → route and upsert coins, OHLC and
-    * market cap (an unroutable frame is skipped, as the reference logs
-    * and continues, `spark-streaming.py:144-147`) → upsert prices and
-    * indicators together. Each table's jobs run under the description
+  /** One micro-batch, committed as one unit: parse → demux → stage every
+    * routed table (an unroutable frame is skipped, as the reference logs
+    * and continues, `spark-streaming.py:144-147`) → one [[Router.commit]]
+    * of all of them. Each table's jobs run under the description
     * `processBatch <table>`.
     *
     * Prices and indicators share one merge: the batch ∪ the stored prices,
@@ -74,42 +79,41 @@ object Pipeline {
     * written to `.price_data.tmp`; the indicators of every series are then
     * folded over the same cached partitions ([[IndicatorFold.foldSeries]]:
     * no second exchange, no re-read of `price_data`) into
-    * `.technical_indicators.tmp`, and both tables are swapped in.
+    * `.technical_indicators.tmp`.
     *
-    * `technical_indicators` is a pure function of `price_data`, equal to
-    * [[graft.indicators.Indicators.withIndicators]] over it exactly
-    * (PipelineExactnessSpec). So re-running a batch after a crash at any
-    * point leaves the same sink: the upserts are idempotent, an
-    * interrupted swap is recovered, and the indicators are re-derived
-    * from the re-merged prices. */
+    * It starts with [[Router.recover]], which brings a sink crashed at any
+    * point to the previous batch or to that one, never a mix ([[Router]]);
+    * re-running the batch then leaves the sink a clean run would: the
+    * merges are idempotent, and `technical_indicators`, equal to
+    * [[graft.indicators.Indicators.withIndicators]] over `price_data`
+    * exactly (PipelineExactnessSpec), is re-derived from the new prices. */
   def processBatch(spark: SparkSession, batch: DataFrame, sinkDir: String,
       mcapTs: Option[Timestamp] = None): Unit = {
+    Router.recover(sinkDir)
     val d = Envelope.demux(Envelope.parse(batch), mcapTs)
-    def commit(table: String)(body: => Unit): Unit =
-      Staging.phase(spark, s"processBatch $table")(body)
-    for (df <- Seq(d.coins, d.ohlc, d.marketCap); table <- Router.route(df))
-      commit(table)(Router.upsert(spark, df, table, sinkDir))
+    def stage(table: String)(rows: => DataFrame): Unit =
+      Staging.phase(spark, s"processBatch $table")(Router.stage(rows, table, sinkDir))
+    val entities = for (df <- Seq(d.coins, d.ohlc, d.marketCap); table <- Router.route(df))
+      yield { stage(table)(Router.merge(spark, df, table, sinkDir)); table }
     val merged = Router.merge(spark, d.price, "price_data", sinkDir,
       cluster = Seq("coin_id", "exchange")).persist()
     try {
-      commit("price_data")(Router.stage(merged, "price_data", sinkDir))
-      commit("technical_indicators")(Router.stage(
-        IndicatorFold.foldSeries(merged).toDF(), "technical_indicators", sinkDir))
+      stage("price_data")(merged)
+      stage("technical_indicators")(IndicatorFold.foldSeries(merged).toDF())
     } finally merged.unpersist()
-    Router.swap("price_data", sinkDir)
-    Router.swap("technical_indicators", sinkDir)
+    Router.commit(sinkDir, entities :+ "price_data" :+ "technical_indicators")
   }
 
   /** Backfill: fold every series of the stored `price_data` and replace
     * `technical_indicators` with the result (no merge with the stored
-    * indicators), through the same stage-and-swap commit as
-    * [[processBatch]]. */
+    * indicators), through the same stage-and-commit as [[processBatch]]. */
   def deriveIndicators(spark: SparkSession, sinkDir: String): Unit = {
+    Router.recover(sinkDir)
     val priceDir = s"$sinkDir/price_data"
     if (java.nio.file.Files.exists(java.nio.file.Paths.get(priceDir))) {
       Router.stage(IndicatorFold.derive(spark.read.parquet(priceDir)).toDF(),
         "technical_indicators", sinkDir)
-      Router.swap("technical_indicators", sinkDir)
+      Router.commit(sinkDir, Seq("technical_indicators"))
     }
   }
 }

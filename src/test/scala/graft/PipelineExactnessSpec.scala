@@ -163,10 +163,11 @@ class PipelineExactnessSpec extends SparkSpec {
     assert(mismatches(sink) === 0)
 
     val batch = envelope(walk(A._1, A._2, (20 to 22) ++ (30 until 32)) ++ walk(D._1, D._2, 3 until 18))
-    // the crash: the entity upserts ran, the indicator upsert did not
+    // the crash: the entity tables were committed, the indicators were not
     val d = Envelope.demux(Envelope.parse(batch))
-    for (df <- Seq(d.coins, d.price, d.ohlc, d.marketCap); table <- Router.route(df))
-      Router.upsert(spark, df, table, sink)
+    val entities = for (df <- Seq(d.coins, d.price, d.ohlc, d.marketCap); table <- Router.route(df))
+      yield { Router.stage(Router.merge(spark, df, table, sink), table, sink); table }
+    Router.commit(sink, entities)
     assert(mismatches(sink) > 0)
     // the replay of the same input
     Pipeline.processBatch(spark, batch, sink)

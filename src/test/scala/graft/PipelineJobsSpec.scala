@@ -83,6 +83,8 @@ class PipelineJobsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(jobs.size <= 10, jobs.mkString("; "))
     assert(jobs.forall(d => Tables.exists(t => d == s"processBatch $t")), jobs.mkString("; "))
     assert(Tables.forall(t => jobs.contains(s"processBatch $t")), jobs.mkString("; "))
+    // one commit: the five tables, no record and nothing staged left
+    assert(new java.io.File(sink).list().toSet === Tables.toSet)
   }
 
   test("the price merge plans one exchange on the series key; the indicator fold over it none") {

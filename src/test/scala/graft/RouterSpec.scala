@@ -1,11 +1,19 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+
+import org.apache.spark.sql.DataFrame
 
 import graft.sink.Router
 
 class RouterSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Merge `batch` into `dir/<table>`, stage the result and commit it. */
+  private def upsert(batch: DataFrame, table: String, dir: Path): Unit = {
+    Router.stage(Router.merge(spark, batch, table, dir.toString), table, dir.toString)
+    Router.commit(dir.toString, Seq(table))
+  }
 
   test("schema probe routes each entity shape to its table") {
     assert(Router.route(Seq(("a", "b", "c")).toDF("id", "name", "symbol"))
@@ -25,44 +33,28 @@ class RouterSpec extends SparkSpec {
     val dir = Files.createTempDirectory("router"); dir.toFile.deleteOnExit()
     val batch = Seq(("c1", "Coin One", "C1"), ("c2", "Coin Two", "C2"))
       .toDF("id", "name", "symbol")
-    Router.upsert(spark, batch, "coins", dir.toString)
+    upsert(batch, "coins", dir)
     val first = spark.read.parquet(s"$dir/coins")
       .as[(String, String, String)].collect().sortBy(_._1).toSeq
-    Router.upsert(spark, batch, "coins", dir.toString)
+    upsert(batch, "coins", dir)
     val second = spark.read.parquet(s"$dir/coins")
       .as[(String, String, String)].collect().sortBy(_._1).toSeq
     assert(first === second)
     assert(second.map(_._1) === Seq("c1", "c2"))
   }
 
-  test("upsert recovers a table whose previous swap died after the rename-aside") {
-    val dir = Files.createTempDirectory("router-crash"); dir.toFile.deleteOnExit()
-    val batch1 = Seq(("c1", "One", "C1")).toDF("id", "name", "symbol")
-    Router.upsert(spark, batch1, "coins", dir.toString)
-    // simulate a crash mid-swap: dest was renamed aside, tmp->dest move
-    // never happened — the .old dir is the only copy of the table
-    Files.move(dir.resolve("coins"), dir.resolve(".coins.old"))
-    val batch2 = Seq(("c2", "Two", "C2")).toDF("id", "name", "symbol")
-    Router.upsert(spark, batch2, "coins", dir.toString)
-    val ids = spark.read.parquet(s"$dir/coins")
-      .select("id").as[String].collect().sorted.toSeq
-    assert(ids === Seq("c1", "c2")) // c1 recovered from .old, c2 merged in
-    assert(!Files.exists(dir.resolve(".coins.old")))
-    assert(!Files.exists(dir.resolve(".coins.tmp")))
-  }
-
   test("upsert reads the stored table with the batch's schema: a missing column reads as null, a conflicting type fails") {
     val dir = Files.createTempDirectory("router-schema"); dir.toFile.deleteOnExit()
     // a stored file written before the table had a `symbol` column
     Seq(("c1", "One")).toDF("id", "name").write.parquet(s"$dir/coins")
-    Router.upsert(spark, Seq(("c2", "Two", "C2")).toDF("id", "name", "symbol"), "coins", dir.toString)
+    upsert(Seq(("c2", "Two", "C2")).toDF("id", "name", "symbol"), "coins", dir)
     def stored = spark.read.parquet(s"$dir/coins")
       .as[(String, String, Option[String])].collect().sortBy(_._1).toSeq
     assert(stored === Seq(("c1", "One", None), ("c2", "Two", Some("C2"))))
     // `symbol` is stored as a string; a batch carrying it as a double must
     // not read the stored strings as nulls
     val conflicting = Seq(("c3", "Three", 3.0)).toDF("id", "name", "symbol")
-    intercept[Exception](Router.upsert(spark, conflicting, "coins", dir.toString))
+    intercept[Exception](upsert(conflicting, "coins", dir))
     assert(stored.map(_._1) === Seq("c1", "c2"))
   }
 
