@@ -94,10 +94,6 @@ object SparkEntry {
     "q_simhash_acc" -> ((s, d) => Dedup.simhashAccuracy(s, d)),
     // engine-portable bloom (rows, not a blob) + exact FP census
     "q_bloom_fpr" -> ((s, d) => Dedup.bloomFpr(s, d)),
-    // Dedup.simhashNeighbors stays a library op (DedupSpec): on this
-    // shared-vocabulary synthetic corpus its 16-bit signature space
-    // concentrates, so the exact-recall banded join degenerates toward
-    // all-pairs — not a useful bench query here
     "q_dedup_embedding" -> ((s, d) => Dedup.embeddingNearDups(s, d)),
     "q_dedup_survivors" -> ((s, d) => Dedup.dedupSurvivors(s, d)),
     "q_dedup_semantic" -> ((s, d) => Dedup.semanticDedup(s, d)),

@@ -663,8 +663,7 @@ object Dedup {
     * hashing runs on the codegen'd per-row path with partial aggregation;
     * the equivalent in-row `array_min(transform(...))` form measured ~5x
     * slower here because higher-order functions evaluate through
-    * interpreted lambdas per element (streaming, which cannot shuffle,
-    * pays that cost knowingly in [[graft.streaming.StreamDedup.bandKey]]). */
+    * interpreted lambdas per element. */
   def minhashSignatures(docs: DataFrame): DataFrame = {
     val sh = shingles(docs)
     val aggs = (0 until MinhashK).map(k =>
@@ -815,7 +814,7 @@ object Dedup {
     *     lambda — no suffix slices materialize anywhere) and a per-doc
     *     max is exact. The benchmark's seed grams and its raw docs are
     *     both broadcast (benchmarks are intrinsically small — the same
-    *     contract as [[contamination]] and StreamContamination), so the
+    *     contract as [[contamination]]), so the
     *     train side is one streaming pass: explode → broadcast-probe →
     *     LCP → map-side-combined max. Pair volume is Σ_g cntTrain(g) ·
     *     cntBench(g) ≤ |bench positions| · max-gram-frequency — linear
@@ -1015,31 +1014,6 @@ object Dedup {
       .select(col("simhash"), col("keep_id"), col("n_docs"))
       .orderBy(col("simhash"))
 
-  /** SimHash near-neighbor pairs: documents within Hamming distance 1 of
-    * each other's 16-bit fingerprints. Candidates come from an equi-join
-    * on the two 8-bit signature halves (pigeonhole: one differing bit
-    * leaves one half identical, so recall is exact, not probabilistic);
-    * the full Hamming distance is computed only on candidates. */
-  def simhashNeighbors(spark: SparkSession, dir: String, maxDist: Int = 1): DataFrame = {
-    require(maxDist <= 1, "half-band candidates guarantee recall only up to distance 1")
-    val fp = Tables.documents(spark, dir)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .select(col("doc_id"), simhash(col("text")).as("sig"))
-      .withColumn("b1", substring(col("sig"), 1, 8))
-      .withColumn("b2", substring(col("sig"), 9, 8))
-    val a = fp.as("a"); val b = fp.as("b")
-    // native codegen'd byte loop instead of 32 per-pair Substring evals —
-    // identical result on the ASCII fingerprint domain (FunctionsSpec)
-    val hamming = graft.functions.StrHamming(spark, col("a.sig"), col("b.sig"))
-    a.join(b,
-        (col("a.b1") === col("b.b1") || col("a.b2") === col("b.b2")) &&
-          col("a.doc_id") < col("b.doc_id"))
-      .withColumn("hamming", hamming)
-      .filter(col("hamming") <= maxDist)
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"), col("hamming"))
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
   /** Engine-portable Bloom filter + exact false-positive census — the
     * replayable complement to the native BloomFilterAggregate used by
     * q_incremental_bloom (whose bit layout is Spark-internal and
@@ -1093,7 +1067,7 @@ object Dedup {
         round(Seq.fill(k)(loadC).reduce(_ * _), 6).as("fp_theory"))
   }
 
-  /** SimHash estimator-accuracy census — the [[simhashNeighbors]] family's
+  /** SimHash estimator-accuracy census — the [[simhashGroups]] family's
     * q_minhash_acc twin: on a fixed probe slice, every pair's 16-bit
     * fingerprint Hamming distance against its EXACT distinct-token
     * Jaccard, bucketed by distance. The SimHash guarantee is that

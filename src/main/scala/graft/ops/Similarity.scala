@@ -483,51 +483,6 @@ object Similarity {
       .orderBy(col("rnk"))
   }
 
-  /** `iters` Lloyd (k-means) rounds from the deterministic first-`k`
-    * seeds: assign every vector to its max-cosine centroid, recompute
-    * each centroid as the elementwise mean of its members, repeat.
-    * Returns the final (centroid_id, cv) centroid table.
-    *
-    * Scale shape per round: centroids are k×dim doubles — genuinely
-    * tiny — so they are collected and re-broadcast each round (what
-    * MLlib's KMeans does); assignment is a broadcast join + one window
-    * top-1, the update one (centroid, position) aggregation. The corpus
-    * never shuffles by cluster. Empty clusters keep their previous
-    * centroid, so ids are stable and k never shrinks.
-    *
-    * SPEC-ONLY BY DESIGN (SimilaritySpec): double means never hash-match
-    * across engines, so the oracle-gated twin [[kmeansQuantized]]
-    * (q_ivf_kmeans) supersedes this for correctness gating; this variant
-    * stays as the float-precision form a user would actually deploy. */
-  def kmeansCentroids(spark: SparkSession, dir: String,
-      k: Int = 8, iters: Int = 3): DataFrame = {
-    import spark.implicits._
-    val e = vecs(spark, dir)
-    var cents: Map[Long, Seq[Double]] = e.filter(col("vec_id") < k)
-      .select(col("vec_id"), col("v")).as[(Long, Seq[Double])]
-      .collect().toMap
-    for (_ <- 1 to iters) {
-      val centsDf = cents.toSeq.map { case (id, v) => (id, v) }
-        .toDF("centroid_id", "cv")
-        .withColumn("cnrm", norm(col("cv")))
-      val assigned = e.join(broadcast(centsDf))
-        .withColumn("sim", cosinePrenormed(col("v"), col("cv"), col("nrm"), col("cnrm")))
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("centroid_id"))))
-        .filter(col("rnk") === 1)
-      val updated = assigned
-        .select(col("centroid_id"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("centroid_id"), col("pos"))
-        .agg(avg(col("x")).as("m"))
-        .groupBy(col("centroid_id"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("centroid_id"), transform(col("pm"), p => p.getField("m")).as("cv"))
-        .as[(Long, Seq[Double])].collect().toMap
-      cents = cents.map { case (id, v) => id -> updated.getOrElse(id, v) }
-    }
-    cents.toSeq.sortBy(_._1).toDF("centroid_id", "cv")
-  }
-
   /** Lloyd k-means over integer-quantized vectors, exactly
     * reproducible on any engine: components quantize once to
     * `round(x * 1000)` (BIGINT), distances are integer squared-L2, and
@@ -1226,10 +1181,7 @@ object Similarity {
     * index runs when new data arrives — train on the BASE half of the
     * corpus, census how the DELTA half lands in those buckets, and
     * trigger a re-train when any bucket's occupancy share drifts past
-    * `driftThresholdPpm` (the batch twin of the live occupancy feed in
-    * [[graft.streaming.StreamIvf]]; IvfMaintenanceSpec asserts the
-    * streaming census reproduces the batch one bit-for-bit and reaches
-    * the same trigger decision).
+    * `driftThresholdPpm`.
     *
     * One report row per centroid: base/delta occupancy, each side's
     * share in ppm (integer division — engine-exact), the absolute
@@ -1275,11 +1227,8 @@ object Similarity {
 
   /** The stale-index ingredients of [[ivfMaintenance]]: the base/delta
     * split point, the quantized long-format corpus, and the centroids
-    * trained on the base half (first-k seeds + one Lloyd round).
-    * Exposed so IvfMaintenanceSpec can feed the SAME centroids to
-    * [[graft.streaming.StreamIvf]] and assert the live occupancy census
-    * reproduces the batch one. */
-  def ivfStaleParts(spark: SparkSession, dir: String,
+    * trained on the base half (first-k seeds + one Lloyd round). */
+  private def ivfStaleParts(spark: SparkSession, dir: String,
       k: Int = 8): (Long, DataFrame, DataFrame) = {
     val raw = Tables.embeddings(spark, dir)
     // bounded driver state: one scalar, the base/delta split point

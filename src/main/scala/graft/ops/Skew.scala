@@ -83,8 +83,7 @@ object Skew {
     * tables ever meeting. This is the "measure before you shuffle"
     * primitive: at 100 TB you size a candidate join (will the shuffle
     * explode? is one side's key distribution pathological?) from
-    * per-shard sketches that were maintained at ingest, the same cells
-    * [[graft.streaming.StreamSketch]] keeps.
+    * per-shard sketches that were maintained at ingest.
     *
     * Two measures on the harness schema: the orders⋈customer equi-join
     * and the SELF-join size of lineitem on l_partkey — the latter is the

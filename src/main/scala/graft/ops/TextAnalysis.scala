@@ -1610,38 +1610,27 @@ object TextAnalysis {
     * vocabulary (31 terms) fits a 512-cell sketch collision-free, which
     * would leave the min-over-rows untested — bigrams (~1k distinct) at
     * w=64 give every probe a real collision to survive. */
-  /** Cell coordinate of hash row `i` for an item — md5-derived, shared
-    * by the batch sketch and its streaming twin ([[graft.streaming.StreamSketch]]). */
-  def cmBucket(i: Int, c: Column, w: Int): Column =
+  /** Cell coordinate of hash row `i` for an item — md5-derived. */
+  private def cmBucket(i: Int, c: Column, w: Int): Column =
     conv(substring(md5(concat(lit(s"cm$i|"), c)), 1, 8), 16, 10)
       .cast("long") % w
 
   /** Adjacent word bigrams of a text column, as `array<string>`. */
-  def bigramTerms(text: Column): Column = {
+  private def bigramTerms(text: Column): Column = {
     val toks = tokens(text)
     val n = size(toks)
     zip_with(slice(toks, lit(1), n - 1), slice(toks, lit(2), n - 1),
       (a, b) => concat(a, lit(" "), b))
   }
 
-  /** The d×w cell fan-out + count for a (streaming or batch) term
-    * column — works unchanged under Structured Streaming because it is
-    * one stateful groupBy aggregation over a bounded key space (state is
-    * the d·w cells; the weighted variant below would instead keep
-    * per-term state, unbounded on an open stream). */
-  def cmCells(terms: DataFrame, d: Int, w: Int): DataFrame =
-    terms
-      .select(posexplode(array((0 until d).map(i =>
-        cmBucket(i, col("term"), w)): _*)).as(Seq("row", "bucket")))
-      .groupBy(col("row"), col("bucket")).agg(count(lit(1)).as("cnt"))
-
-  /** Batch form: pre-aggregate term frequencies, then sketch the
-    * FREQUENCY VECTOR — cell-identical to [[cmCells]] (cells are sums
-    * of per-term counts either way) but the d md5 digests are paid per
-    * DISTINCT term, not per occurrence: on a duplication-heavy column
-    * (join keys, tokens) that is orders of magnitude less map-side CPU,
-    * traded for one extra key-partitioned aggregate whose partial pass
-    * bounds the shuffle at distinct-terms-per-partition. */
+  /** The d×w count-min cells of a term column: pre-aggregate term
+    * frequencies, then sketch the FREQUENCY VECTOR — the same cells as
+    * fanning out every occurrence (cells are sums of per-term counts
+    * either way) but the d md5 digests are paid per DISTINCT term, not
+    * per occurrence: on a duplication-heavy column (join keys, tokens)
+    * that is orders of magnitude less map-side CPU, traded for one extra
+    * key-partitioned aggregate whose partial pass bounds the shuffle at
+    * distinct-terms-per-partition. */
   def cmCellsWeighted(terms: DataFrame, d: Int, w: Int): DataFrame =
     terms.groupBy(col("term")).agg(count(lit(1)).as("f"))
       .select(col("f"), posexplode(array((0 until d).map(i =>
@@ -1766,29 +1755,6 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_docs"),
         sum(tokenCount(col("text")).cast("long")).as("total_tokens"))
       .orderBy(col("split"), col("lang"))
-  }
-
-  /** [[dataPrep]]'s quality gate with ONE-PASS observability: two
-    * `observe` nodes meter the stream as it flows — corpus size and
-    * token mass at ingest, surviving size and mass after the gate — so
-    * admission metrics cost zero extra scans (at 100 TB a metrics
-    * recount is a second pass over the corpus; `observe` aggregates ride
-    * the existing task iterators, the same mechanism as SQL metrics).
-    * Returns the gated frame plus the two Observations; callers read
-    * them after any action. Metric exactness vs direct aggregation is
-    * asserted in TextPipelineSpec. */
-  def qualityGateObserved(spark: SparkSession, dir: String,
-      minQuality: Double = 0.5):
-      (DataFrame, org.apache.spark.sql.Observation, org.apache.spark.sql.Observation) = {
-    val ingest = org.apache.spark.sql.Observation("ingest")
-    val kept = org.apache.spark.sql.Observation("kept")
-    val gated = Tables.documents(spark, dir)
-      .observe(ingest, count(lit(1)).as("n_docs"),
-        sum(tokenCount(col("text")).cast("long")).as("total_tokens"))
-      .filter(qualityScore(col("text")) >= minQuality)
-      .observe(kept, count(lit(1)).as("n_docs"),
-        sum(tokenCount(col("text")).cast("long")).as("total_tokens"))
-    (gated, ingest, kept)
   }
 
   /** Corpus rollup per (lang, source) — count/χ stats over features. */

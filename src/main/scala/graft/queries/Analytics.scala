@@ -816,13 +816,16 @@ object Analytics {
     * columns are BIGINTs/flags — no float anywhere. The per-key
     * quantile windows run over the BOUNDED histograms (the
     * classifierAuc bounded-table exception, ≤ 64·sub rows per key). */
-  /** The sketch-histogram core over any (event_type, c >= 1 cents)
-    * frame — one additive aggregation on a FIXED key space (≤ 64·sub
-    * cells per event_type), so it runs identically as a batch pass and
-    * as a stateful streaming aggregation
-    * ([[graft.streaming.StreamQuantile]] — cells merge by addition). */
-  def sketchCells(base: DataFrame, sub: Int = 8): DataFrame =
-    base
+  def quantileSketch(spark: SparkSession, dir: String,
+      sub: Int = 8, qs: Seq[Int] = Seq(50, 90, 99)): DataFrame = {
+    val base = Tables.events(spark, dir)
+      .select(col("event_type"),
+        round(col("value") * 100).cast("long").as("c"))
+      .filter(col("c") >= 1)
+      .localCheckpoint(eager = false) // sketch pass + exact harness read it
+    // one additive aggregation on a FIXED key space (≤ 64·sub cells per
+    // event_type): cells from disjoint inputs merge by addition
+    val hist = base
       .withColumn("e", (length(bin(col("c"))) - 1).cast("long"))
       .withColumn("p2", expr("shiftleft(1L, cast(e as int))"))
       .withColumn("subb", expr(s"(c - p2) * $sub div p2"))
@@ -831,15 +834,6 @@ object Analytics {
       .agg(count(lit(1)).as("cnt"))
       .withColumn("lo_cents", col("p2") + expr(s"subb * p2 div $sub"))
       .withColumn("hi_cents", col("p2") + expr(s"(subb + 1) * p2 div $sub"))
-
-  def quantileSketch(spark: SparkSession, dir: String,
-      sub: Int = 8, qs: Seq[Int] = Seq(50, 90, 99)): DataFrame = {
-    val base = Tables.events(spark, dir)
-      .select(col("event_type"),
-        round(col("value") * 100).cast("long").as("c"))
-      .filter(col("c") >= 1)
-      .localCheckpoint(eager = false) // sketch pass + exact harness read it
-    val hist = sketchCells(base, sub)
     val wKey = Window.partitionBy(col("event_type")).orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = hist
@@ -1091,8 +1085,8 @@ object Analytics {
     * from the snapshot (every 7th key updated, every 11th deleted,
     * every 13th re-keyed as an insert) so the oracle reproduces it
     * exactly. One shuffle on the key at any scale — and on a real
-    * deployment the snapshot side is bucketed on the key
-    * (Layout.writeBucketed), making the merge shuffle-free on re-runs. */
+    * deployment the snapshot side is bucketed on the key, making the
+    * merge shuffle-free on re-runs. */
   def mergeApply(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.orders(spark, dir)
       .select(col("o_orderkey").as("k"), col("o_orderstatus").as("status"),
@@ -1204,10 +1198,9 @@ object Analytics {
   }
 
   /** Morton (Z-order) clustering code per lineitem row over the
-    * (l_partkey, l_suppkey) cell grid — the clustering key
-    * [[graft.sink.Layout.zorderWrite]] range-partitions and sorts by.
-    * Emitted per-row so the bit-interleave is oracle-checkable; the
-    * layout effect (multi-dim file skipping) is asserted in LayoutSpec. */
+    * (l_partkey, l_suppkey) cell grid — the key a Z-order writer
+    * range-partitions and sorts by. Emitted per-row so the
+    * bit-interleave is oracle-checkable. */
   def zorderCodes(spark: SparkSession, dir: String): DataFrame =
     Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_linenumber"),

@@ -1,89 +1,21 @@
 package graft.sink
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Physical table layout for fact tables at scale: date-partitioned,
-  * key-hash sub-partitioned, key-sorted within files.
+/** Physical layout helpers for fact tables at scale.
   *
   * The reference stores facts keyed `((coin, exchange), ts DESC)` in
   * Cassandra and then full-scans around that layout (`ALLOW FILTERING`,
-  * SURVEY.md §4). This is the parquet-native equivalent done right:
+  * SURVEY.md §4). Two parquet-native pieces live here:
   *
-  *   - `p_date=YYYY-MM-DD` directory partitioning → time-range queries
-  *     prune whole partitions before any IO (`PartitionFilters` in the
-  *     scan, asserted in LayoutSpec);
-  *   - `p_bucket = hash(key) % n` sub-partitioning → a per-key query
-  *     touches one bucket per day, and two tables bucketed the same way
-  *     join co-located after AQE;
-  *   - `sortWithinPartitions(key, ts)` → parquet row-group stats make
-  *     per-key reads skip most pages, and downstream window functions
-  *     over (key, ts) often avoid a re-sort.
-  *
-  * At 100 TB this layout is what turns the dashboard queries from
-  * full scans into partition-pruned, page-skipped reads.
+  *   - [[mortonCode]], the 2-D Z-order clustering key (`q_zorder`): a
+  *     file range-partitioned and sorted on it covers a compact region
+  *     of both dims, so min/max stats prune predicates on either one;
+  *   - [[compactionPlan]], the small-file OPTIMIZE planner
+  *     (`q_compaction_plan`).
   */
 object Layout {
-
-  /** Write `df` date-partitioned on `tsCol` and hash-bucketed on
-    * `keyCols` into `nBuckets` sub-partitions. */
-  def writePartitioned(
-      df: DataFrame,
-      path: String,
-      tsCol: String,
-      keyCols: Seq[String],
-      nBuckets: Int = 16): Unit =
-    df.withColumn("p_date", to_date(col(tsCol)))
-      .withColumn("p_bucket", pmod(hash(keyCols.map(col): _*), lit(nBuckets)))
-      .repartition(col("p_date"), col("p_bucket"))
-      .sortWithinPartitions((keyCols :+ tsCol).map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("p_date", "p_bucket")
-      .parquet(path)
-
-  /** Read back with a date range that prunes at the partition level. */
-  def readDateRange(spark: SparkSession, path: String,
-      fromDate: String, untilDate: String): DataFrame =
-    spark.read.parquet(path)
-      .filter(col("p_date") >= lit(fromDate) && col("p_date") < lit(untilDate))
-
-  /** Write as a true bucketed table (Hive-style bucketing metadata via
-    * the session catalog): joins and aggregations between tables bucketed
-    * the same way on the same keys need NO shuffle at all — the single
-    * biggest lever for repeated big⋈big joins at 100 TB. Verified
-    * shuffle-free in LayoutSpec. */
-  def writeBucketed(
-      df: DataFrame,
-      tableName: String,
-      keyCols: Seq[String],
-      nBuckets: Int = 16): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .format("parquet")
-      .bucketBy(nBuckets, keyCols.head, keyCols.tail: _*)
-      .sortBy(keyCols.head, keyCols.tail: _*)
-      .saveAsTable(tableName)
-
-  /** Persist an IVF ANN index as a centroid-partitioned table — the
-    * storage form `Similarity.ivfTopK`'s scaladoc promises: a probe of
-    * `nprobe` centroids becomes a partition-pruned scan that never
-    * touches the other buckets' files. At billion-vector scale the
-    * probe cost is nprobe/nlist of the corpus, enforced by LAYOUT, not
-    * by a filter the reader must trust. */
-  def writeIvf(spark: SparkSession, dir: String, path: String,
-      nlist: Int = 8): Unit =
-    graft.ops.Similarity.ivfAssign(spark, dir, nlist)
-      .select(col("vec_id"), col("label"), col("v"), col("nrm"),
-        col("centroid_id"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("centroid_id")
-      .parquet(path)
-
-  /** Probe the stored IVF index: scan only the given centroids'
-    * partitions. */
-  def probeIvf(spark: SparkSession, path: String,
-      centroids: Seq[Long]): DataFrame =
-    spark.read.parquet(path)
-      .filter(col("centroid_id").isin(centroids: _*))
 
   /** 2-D Morton (Z-order) code: interleave the low `bits` bits of two
     * already-quantized cell coordinates (x in even positions, y in odd).
@@ -93,43 +25,6 @@ object Layout {
       shiftleft(shiftright(x.cast("long"), k).bitwiseAND(1), 2 * k) +
         shiftleft(shiftright(y.cast("long"), k).bitwiseAND(1), 2 * k + 1)
     }.reduce(_ + _)
-
-  /** Linear quantization of a value into [0, 2^bits) cells — the cheap
-    * cell assignment real Z-order writers use (Delta/Iceberg use range
-    * boundaries; linear is equivalent for near-uniform dims and needs
-    * only a global min/max, not a sort). */
-  def quantize(c: Column, lo: Double, hi: Double, bits: Int): Column = {
-    val cells = 1 << bits
-    val step = (hi - lo) / cells
-    if (step <= 0) lit(0L) // constant (or empty) dim: one cell, not NaN
-    else least(lit(cells - 1L), greatest(lit(0L),
-      floor((c.cast("double") - lo) / step).cast("long")))
-  }
-
-  /** Z-order-clustered write: quantize the two dims (one min/max agg),
-    * Morton-interleave, range-partition on the code into `nFiles` files,
-    * sort within each file by the code. Every output file then covers a
-    * compact rectangle-ish region of (dimX, dimY) space, so parquet
-    * min/max stats prune files/row-groups for predicates on EITHER or
-    * BOTH dims — the multi-dimensional generalization of sortWithin
-    * Partitions that single-column layouts can't give. Skipping is
-    * asserted quantitatively in LayoutSpec. */
-  def zorderWrite(df: DataFrame, path: String, dimX: String, dimY: String,
-      nFiles: Int = 16, bits: Int = 8): Unit = {
-    val mm = df.agg(
-      min(col(dimX).cast("double")), max(col(dimX).cast("double")),
-      min(col(dimY).cast("double")), max(col(dimY).cast("double"))).head()
-    val (loX, hiX, loY, hiY) =
-      if (mm.isNullAt(0)) (0.0, 0.0, 0.0, 0.0) // empty input: degenerate grid
-      else (mm.getDouble(0), mm.getDouble(1), mm.getDouble(2), mm.getDouble(3))
-    df.withColumn("__z", mortonCode(
-        quantize(col(dimX), loX, hiX, bits),
-        quantize(col(dimY), loY, hiY, bits), bits))
-      .repartitionByRange(nFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode(SaveMode.Overwrite).parquet(path)
-  }
 
   /** Small-file compaction planner (the OPTIMIZE step of a lakehouse
     * table): roll per-(source, lang) shard sizes up from the documents
@@ -157,17 +52,5 @@ object Layout {
       .select(col("source"), col("lang"), col("bytes"), col("bin"),
         col("bin_bytes"))
       .orderBy(col("source"), col("lang"))
-  }
-
-  /** Read one key's slice: date partitions pruned by range, bucket
-    * partitions pruned by the key hash. */
-  def readKey(spark: SparkSession, path: String, keyCols: Seq[String],
-      keyValues: Seq[Any], nBuckets: Int = 16): DataFrame = {
-    val df = spark.read.parquet(path)
-    val bucket = pmod(hash(keyValues.map(lit): _*), lit(nBuckets))
-    keyCols.zip(keyValues)
-      .foldLeft(df.filter(col("p_bucket") === bucket)) {
-        case (d, (c, v)) => d.filter(col(c) === lit(v))
-      }
   }
 }

@@ -14,7 +14,7 @@ import graft.ingest.Envelope
   * `dags/crypto_data_streaming.py:179-184` producer).
   *
   * The format string is a parameter so the identical pipeline runs
-  * against [[graft.sources.MockKafka]] in tests (same wire schema, same
+  * against the `graft.sources.MockKafka` test double (same wire schema, same
   * P1 cast, same demux/sink stages — KafkaPipelineSpec drives it end to
   * end) and against a real broker at deploy time with ONLY the default
   * arguments: the sandbox ships no Kafka jars, so `format("kafka")`

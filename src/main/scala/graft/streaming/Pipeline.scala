@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.indicators.IndicatorFold
@@ -71,7 +72,9 @@ object Pipeline {
     * routed table (an unroutable frame is skipped, as the reference logs
     * and continues, `spark-streaming.py:144-147`) → one [[Router.commit]]
     * of all of them. Each table's jobs run under the description
-    * `processBatch <table>`.
+    * `processBatch <table>`. The parsed envelopes are persisted
+    * ([[GraftSqlShim.persistRows]]): the first table's job parses the
+    * batch and keeps it, the others read it, and no job is added.
     *
     * Prices and indicators share one merge: the batch ∪ the stored prices,
     * hash-partitioned on (coin_id, exchange) and deduplicated on the PK
@@ -90,17 +93,19 @@ object Pipeline {
   def processBatch(spark: SparkSession, batch: DataFrame, sinkDir: String,
       mcapTs: Option[Timestamp] = None): Unit = {
     Router.recover(sinkDir)
-    val d = Envelope.demux(Envelope.parse(batch), mcapTs)
+    val (env, envelopes) = GraftSqlShim.persistRows(Envelope.parse(batch))
+    val d = Envelope.demux(env, mcapTs)
     def stage(table: String)(rows: => DataFrame): Unit =
       Staging.phase(spark, s"processBatch $table")(Router.stage(rows, table, sinkDir))
-    val entities = for (df <- Seq(d.coins, d.ohlc, d.marketCap); table <- Router.route(df))
-      yield { stage(table)(Router.merge(spark, df, table, sinkDir)); table }
     val merged = Router.merge(spark, d.price, "price_data", sinkDir,
       cluster = Seq("coin_id", "exchange")).persist()
-    try {
+    val entities = try {
+      val staged = for (df <- Seq(d.coins, d.ohlc, d.marketCap); table <- Router.route(df))
+        yield { stage(table)(Router.merge(spark, df, table, sinkDir)); table }
       stage("price_data")(merged)
       stage("technical_indicators")(IndicatorFold.foldSeries(merged).toDF())
-    } finally merged.unpersist()
+      staged
+    } finally { merged.unpersist(); envelopes.unpersist() }
     Router.commit(sinkDir, entities :+ "price_data" :+ "technical_indicators")
   }
 

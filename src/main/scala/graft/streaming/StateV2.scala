@@ -7,8 +7,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode,
 import graft.model.Schemas.PriceTick
 
 /** Arbitrary stateful processing on the Spark 4 `transformWithState`
-  * API — the successor of `flatMapGroupsWithState` (which
-  * [[StatefulIndicators]] keeps for the indicator engine): typed named
+  * API — the successor of `flatMapGroupsWithState`: typed named
   * state cells (`ValueState`/`ListState`/`MapState`) instead of one
   * opaque state object, per-cell TTL, timers, and schema evolution of
   * state across restarts.
@@ -100,149 +99,5 @@ object StateV2 {
       .as[PriceTick]
     attach(ticks).toDF()
       .orderBy(org.apache.spark.sql.functions.col("coin_id"))
-  }
-
-  // --------------------------------------------------------------------
-  // MapState: streaming heavy hitters (space-saving)
-  // --------------------------------------------------------------------
-
-  /** One tracked counter (Metwally et al.'s space-saving entry): `cnt`
-    * overestimates the true count by at most `err` (the evicted
-    * minimum inherited on admission). */
-  final case class CounterEntry(cnt: Long, err: Long)
-
-  final case class HitterRow(key: String, token: String, cnt: Long, err: Long)
-
-  /** Streaming heavy hitters per key over an unbounded token stream with
-    * `cap` counters of state — the `MapState` face of the v2 state API
-    * (ValueState = [[TickStatsProcessor]]): space-saving (Metwally et
-    * al. 2005), the algorithm behind every streaming top-k with bounded
-    * memory. A seen token increments its counter; an unseen token under
-    * capacity opens one; at capacity it REPLACES the minimum counter,
-    * inheriting its count as the new entry's error bound. Guarantees:
-    * every token with true count > n/cap is tracked, and for every
-    * tracked token `cnt − err ≤ true ≤ cnt`.
-    *
-    * Eviction ties break by (cnt, token) so a replay of the same
-    * per-batch input produces the same state. Each batch emits the
-    * key's full counter snapshot (update-mode semantics: downstream
-    * keeps the latest). State is cap-bounded per key — the 100 TB
-    * contract — and lives in RocksDB like every v2-state processor. */
-  class HeavyHittersProcessor(cap: Int)
-      extends StatefulProcessor[String, (String, String), HitterRow] {
-    @transient private var m: org.apache.spark.sql.streaming.MapState[String, CounterEntry] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      m = getHandle.getMapState[String, CounterEntry]("counters",
-        Encoders.STRING, Encoders.product[CounterEntry], TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[(String, String)],
-        timerValues: TimerValues): Iterator[HitterRow] = {
-      rows.foreach { case (_, tok) =>
-        if (m.containsKey(tok)) {
-          val e = m.getValue(tok)
-          m.updateValue(tok, CounterEntry(e.cnt + 1, e.err))
-        } else {
-          val entries = m.iterator().toSeq
-          if (entries.size < cap) m.updateValue(tok, CounterEntry(1L, 0L))
-          else {
-            val (minTok, minE) = entries.minBy { case (t, e) => (e.cnt, t) }
-            m.removeKey(minTok)
-            m.updateValue(tok, CounterEntry(minE.cnt + 1, minE.cnt))
-          }
-        }
-      }
-      m.iterator().map { case (t, e) => HitterRow(key, t, e.cnt, e.err) }
-    }
-  }
-
-  /** Attach to a (streaming or batch) `(key, token)` Dataset. */
-  def attachHitters(tokens: Dataset[(String, String)],
-      cap: Int = 8): Dataset[HitterRow] = {
-    import tokens.sparkSession.implicits._
-    tokens.groupByKey(_._1)
-      .transformWithState(new HeavyHittersProcessor(cap),
-        TimeMode.None(), OutputMode.Update())
-  }
-
-  // --------------------------------------------------------------------
-  // ListState + event-time timers: session assembly
-  // --------------------------------------------------------------------
-
-  final case class SessionEvent(user_id: String, ts: java.sql.Timestamp,
-      event_type: String)
-  final case class SessionOut(user_id: String, start_ms: Long, end_ms: Long,
-      n_events: Long, path: String)
-
-  /** Gap-based session assembly on the remaining v2-state axes:
-    * `ListState` buffers the open session's events and an EVENT-TIME
-    * TIMER closes it — the session emits when the watermark passes
-    * `last event + gap`, not when a batch happens to see the user again
-    * (the failure mode of purely batch-driven state: an idle user's last
-    * session never closes). The streaming face of q_sessionize's
-    * gaps-and-islands semantics.
-    *
-    * Each batch merges buffered + incoming events in event order;
-    * in-batch gaps close their sessions immediately (input feeds are
-    * in-order per user by contract — a bridge-late event bounded by the
-    * watermark would reopen nothing), the trailing open session goes
-    * back to the ListState, and the one registered timer per key moves
-    * to `maxTs + gap` (previous timer deleted — timers do not
-    * overwrite). State per key is one open session + one timer, however
-    * long the stream runs. */
-  class SessionAssembler(gapMs: Long)
-      extends StatefulProcessor[String, SessionEvent, SessionOut] {
-    @transient private var buf: org.apache.spark.sql.streaming.ListState[SessionEvent] = _
-    @transient private var deadline: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      buf = getHandle.getListState[SessionEvent]("open_session",
-        Encoders.product[SessionEvent], TTLConfig.NONE)
-      deadline = getHandle.getValueState[Long]("deadline",
-        Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def emit(key: String, es: Seq[SessionEvent]): SessionOut =
-      SessionOut(key, es.head.ts.getTime, es.last.ts.getTime,
-        es.length.toLong, es.map(_.event_type).mkString(">"))
-
-    override def handleInputRows(key: String, rows: Iterator[SessionEvent],
-        timerValues: TimerValues): Iterator[SessionOut] = {
-      val all = (buf.get().toSeq ++ rows.toSeq)
-        .sortBy(e => (e.ts.getTime, e.event_type))
-      // split on gaps: all segments but the last are closed in-batch
-      val segments = all.foldLeft(Vector.empty[Vector[SessionEvent]]) {
-        case (acc, e) =>
-          if (acc.nonEmpty && e.ts.getTime - acc.last.last.ts.getTime <= gapMs)
-            acc.init :+ (acc.last :+ e)
-          else acc :+ Vector(e)
-      }
-      val (closed, open) = (segments.init, segments.last)
-      buf.clear()
-      buf.put(open.toArray)
-      if (Option(deadline.get()).exists(_ != 0L))
-        getHandle.deleteTimer(deadline.get())
-      val t = open.last.ts.getTime + gapMs
-      getHandle.registerTimer(t)
-      deadline.update(t)
-      closed.map(emit(key, _)).iterator
-    }
-
-    override def handleExpiredTimer(key: String, timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[SessionOut] = {
-      val es = buf.get().toSeq.sortBy(e => (e.ts.getTime, e.event_type))
-      buf.clear(); deadline.clear()
-      if (es.isEmpty) Iterator.empty else Iterator.single(emit(key, es))
-    }
-  }
-
-  /** Attach to a watermarked streaming `SessionEvent` Dataset. */
-  def attachSessions(events: Dataset[SessionEvent],
-      gapMs: Long = 30L * 60 * 1000): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .transformWithState(new SessionAssembler(gapMs),
-        TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -16,7 +16,7 @@ import graft.util.Tables
   * events — and the PSI join happens per EMITTED window against the
   * broadcast reference (types·bins rows). Nothing driver-side, nothing
   * unbounded: late data beyond the watermark is dropped by the window
-  * aggregate exactly like `WindowedStats`.
+  * aggregate.
   */
 object StreamDrift {
 

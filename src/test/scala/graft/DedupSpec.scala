@@ -191,23 +191,6 @@ class DedupSpec extends SparkSpec {
       s"LSH recall $found/${nearDups.size} below 80%")
   }
 
-  test("simhash neighbors: exact dups pair at distance 0; all pairs respect the bound") {
-    val tmp = java.nio.file.Files.createTempDirectory("shnn")
-    try {
-      docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-      val pairs = Dedup.simhashNeighbors(spark, tmp.toString)
-        .as[(Long, Long, Int)].collect()
-      assert(pairs.exists { case (a, b, d) => a == 0L && b == 2L && d == 0 })
-      assert(pairs.forall(_._3 <= 1))
-      assert(pairs.forall(p => p._1 < p._2)) // no mirrored duplicates
-    } finally {
-      val walk = java.nio.file.Files.walk(tmp)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally walk.close()
-    }
-  }
-
   test("semantic dedup: min-id per cluster always survives; drops have an in-cluster witness") {
     val out = Dedup.semanticDedup(spark, sf)
       .as[(Long, Long, Long)].collect()

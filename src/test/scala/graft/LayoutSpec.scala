@@ -1,98 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sink.Layout
-import graft.util.Tables
 
 class LayoutSpec extends SparkSpec {
-
-  test("date+bucket layout: range reads prune partitions, results match a full scan") {
-    val dir = Files.createTempDirectory("layout"); dir.toFile.deleteOnExit()
-    val ev = Tables.events(spark, sf)
-    Layout.writePartitioned(ev, dir.toString, "ts", Seq("user_id"), nBuckets = 8)
-
-    val ranged = Layout.readDateRange(spark, dir.toString, "2024-01-10", "2024-01-15")
-    // partition pruning visible in the plan, not just the row count
-    val plan = ranged.queryExecution.executedPlan.toString()
-    assert(plan.contains("PartitionFilters: ["), plan)
-    assert(plan.contains("p_date"), plan)
-
-    val expected = ev.filter("ts >= '2024-01-10' AND ts < '2024-01-15'").count()
-    assert(ranged.count() === expected)
-
-    // per-key read: prunes to one bucket, returns exactly that key's rows
-    val key7 = Layout.readKey(spark, dir.toString, Seq("user_id"), Seq(7L), nBuckets = 8)
-    assert(key7.count() === ev.filter("user_id = 7").count())
-    val files = ranged.select(org.apache.spark.sql.functions
-      .input_file_name()).distinct().count()
-    val allFiles = spark.read.parquet(dir.toString)
-      .select(org.apache.spark.sql.functions.input_file_name()).distinct().count()
-    assert(files < allFiles, s"range read touched all $allFiles files")
-  }
-
-  test("z-order layout: a 2-D box predicate can skip most files; linear sort cannot") {
-    import org.apache.spark.sql.functions._
-    val li = Tables.lineitem(spark, sf)
-      .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
-    val zDir = Files.createTempDirectory("zorder"); zDir.toFile.deleteOnExit()
-    val linDir = Files.createTempDirectory("linear"); linDir.toFile.deleteOnExit()
-    Layout.zorderWrite(li, zDir.toString, "l_partkey", "l_suppkey", nFiles = 16)
-    // the single-dim alternative: range-partition + sort on l_partkey only
-    li.repartitionByRange(16, col("l_partkey"))
-      .sortWithinPartitions(col("l_partkey"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(linDir.toString)
-
-    // a file can be skipped for a box predicate iff its (min,max) ranges
-    // on BOTH dims miss the box — exactly what parquet row-group stats
-    // give the reader. Count skippable files under each layout.
-    def skippable(dir: String, loP: Long, hiP: Long, loS: Long, hiS: Long): (Long, Long) = {
-      val stats = spark.read.parquet(dir)
-        .groupBy(input_file_name().as("f"))
-        .agg(min("l_partkey").as("p0"), max("l_partkey").as("p1"),
-          min("l_suppkey").as("s0"), max("l_suppkey").as("s1"))
-      val total = stats.count()
-      val hit = stats.filter(
-        col("p1") >= loP && col("p0") <= hiP &&
-          col("s1") >= loS && col("s0") <= hiS).count()
-      (total - hit, total)
-    }
-    val mm = li.agg(max("l_partkey"), max("l_suppkey")).head()
-    val (hiP, hiS) = (mm.getLong(0), mm.getLong(1))
-    // a box covering ~1/16 of each dim => ~1/256 of the plane
-    val (zSkip, zTotal) = skippable(zDir.toString, 0, hiP / 16, 0, hiS / 16)
-    val (lSkip, lTotal) = skippable(linDir.toString, 0, hiP / 16, 0, hiS / 16)
-    assert(zTotal === 16 && lTotal === 16)
-    // z-order: only files whose z-range overlaps the corner survive
-    assert(zSkip >= 12, s"z-order skipped only $zSkip/16 files")
-    // the linear layout prunes on l_partkey about as well… but NOW flip
-    // the box to constrain ONLY the second dim: linear layouts skip
-    // nothing, z-order still skips most files
-    val (zSkip2, _) = skippable(zDir.toString, 0, hiP, 0, hiS / 16)
-    val (lSkip2, _) = skippable(linDir.toString, 0, hiP, 0, hiS / 16)
-    assert(lSkip2 === 0, s"linear layout unexpectedly skipped $lSkip2 files on dim 2")
-    assert(zSkip2 >= lSkip2 + 4,
-      s"z-order should beat linear on the non-sort dim: $zSkip2 vs $lSkip2")
-    // and the data itself round-trips
-    assert(spark.read.parquet(zDir.toString).count() === li.count())
-  }
-
-  test("bucketed tables join with zero shuffle") {
-    val ev = Tables.events(spark, sf)
-    Layout.writeBucketed(ev.select("event_id", "user_id", "value"),
-      "ev_bucketed_a", Seq("user_id"), nBuckets = 4)
-    Layout.writeBucketed(ev.select("event_id", "user_id", "event_type"),
-      "ev_bucketed_b", Seq("user_id"), nBuckets = 4)
-    val joined = spark.table("ev_bucketed_a")
-      .join(spark.table("ev_bucketed_b"), "user_id")
-    joined.collect()
-    val p = joined.queryExecution.executedPlan.toString()
-    assert(!p.contains("Exchange hashpartitioning"),
-      s"bucketed join still shuffles:\n$p")
-    assert(joined.count() ===
-      ev.select("event_id", "user_id").as("a")
-        .join(ev.select("event_id", "user_id").as("b"), "user_id").count())
-  }
 
   test("compaction plan: bins partition each source's shards, byte-exact") {
     import spark.implicits._
@@ -112,31 +22,5 @@ class LayoutSpec extends SparkSpec {
       }
       assert(shards.map(_._3).sum === cum)
     }
-  }
-
-  test("IVF index storage: a 2-centroid probe is a partition-pruned scan") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("ivf"); dir.toFile.deleteOnExit()
-    Layout.writeIvf(spark, sf, dir.toString, nlist = 8)
-    val probed = Layout.probeIvf(spark, dir.toString, Seq(0L, 3L))
-    // pruning is visible in the plan — the layout enforces the probe cost
-    val plan = probed.queryExecution.executedPlan.toString()
-    assert(plan.contains("PartitionFilters: ["), plan)
-    assert(plan.contains("centroid_id"), plan)
-    val probedFiles = probed
-      .select(org.apache.spark.sql.functions.input_file_name())
-      .distinct().count()
-    val allFiles = spark.read.parquet(dir.toString)
-      .select(org.apache.spark.sql.functions.input_file_name())
-      .distinct().count()
-    assert(probedFiles < allFiles,
-      s"probe touched all $allFiles files")
-    // round trip: exactly the assigned members of the probed buckets
-    val expected = graft.ops.Similarity.ivfAssign(spark, sf, 8)
-      .filter(org.apache.spark.sql.functions.col("centroid_id").isin(0L, 3L))
-      .select("vec_id").as[Long].collect().sorted.toSeq
-    val got = probed.select("vec_id").as[Long].collect().sorted.toSeq
-    assert(got === expected)
-    assert(got.nonEmpty)
   }
 }

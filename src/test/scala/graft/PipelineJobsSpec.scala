@@ -11,6 +11,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.functions.{col, udf}
 
 import graft.indicators.IndicatorFold
 import graft.ingest.Envelope
@@ -19,8 +20,8 @@ import graft.streaming.Pipeline
 
 /** What one micro-batch costs in Spark jobs, and what it names them: a
   * warm `processBatch` onto an existing sink runs a bounded number of
-  * jobs, each described by the table it commits, and the price merge and
-  * the indicator fold share one exchange. */
+  * jobs, each described by the table it commits, parses each envelope
+  * once, and the price merge and the indicator fold share one exchange. */
 class PipelineJobsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -85,6 +86,17 @@ class PipelineJobsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(Tables.forall(t => jobs.contains(s"processBatch $t")), jobs.mkString("; "))
     // one commit: the five tables, no record and nothing staged left
     assert(new java.io.File(sink).list().toSet === Tables.toSet)
+  }
+
+  test("processBatch parses each envelope once, cold and warm") {
+    val sink = Files.createTempDirectory("parse-sink").toString
+    val parsed = spark.sparkContext.longAccumulator("envelopes parsed")
+    val counted = udf { (v: String) => parsed.add(1); v }
+    Seq(0 until 20, 20 until 25).foreach { minutes =>
+      parsed.reset()
+      Pipeline.processBatch(spark, batch(minutes).select(counted(col("value")).as("value")), sink)
+      assert(parsed.value === minutes.size.toLong)
+    }
   }
 
   test("the price merge plans one exchange on the series key; the indicator fold over it none") {

@@ -63,117 +63,4 @@ class StateV2Spec extends SparkSpec {
       }
     }
   }
-
-  test("MapState heavy hitters: space-saving guarantees hold across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // zipfian-ish token stream: token i appears ~40/i times, two keys
-    val toks = for {
-      k <- Seq("en", "de"); i <- 1 to 12; _ <- 1 to (40 / i)
-    } yield (k, s"t$i")
-    val cap = 8
-    val mem = MemoryStream[(String, String)]
-    val q = StateV2.attachHitters(mem.toDS(), cap)
-      .writeStream.format("memory").queryName("hh_out")
-      .outputMode("update").start()
-    try {
-      // split mid-stream so counters must carry across batches
-      Seq(toks.take(100), toks.slice(100, 180), toks.drop(180)).foreach { c =>
-        mem.addData(c); q.processAllAvailable()
-      }
-      val rows = spark.table("hh_out").as[StateV2.HitterRow].collect()
-      val n = toks.groupBy(_._1).view.mapValues(_.size.toLong).toMap
-      val truth = toks.groupBy(identity).view.mapValues(_.size.toLong).toMap
-      // update-mode output accumulates snapshots; evicted tokens leave
-      // stale rows, so cross-batch carry is asserted on the dominant
-      // token, which the min-eviction can never displace: its counter
-      // must end EXACT (cnt == true, err == 0) — impossible unless the
-      // counter survived every batch boundary
-      Seq("en", "de").foreach { k =>
-        val t1 = rows.filter(r => r.key == k && r.token == "t1")
-        assert(t1.nonEmpty)
-        val fin = t1.maxBy(_.cnt)
-        assert(fin.cnt === truth((k, "t1")) && fin.err === 0L,
-          s"$k/t1 ended ${fin.cnt}±${fin.err}, true ${truth((k, "t1"))}")
-      }
-      // full guarantee bounds on a one-shot run, where the single batch's
-      // snapshot IS the final state (no stale rows): cap-bounded state,
-      // cnt-err <= true <= cnt per tracked token, every token with true
-      // count > n/cap tracked
-      val mem1 = MemoryStream[(String, String)]
-      val q1 = StateV2.attachHitters(mem1.toDS(), cap)
-        .writeStream.format("memory").queryName("hh_one")
-        .outputMode("update").start()
-      try {
-        mem1.addData(toks); q1.processAllAvailable()
-        val snap = spark.table("hh_one").as[StateV2.HitterRow].collect()
-        snap.groupBy(_.key).foreach { case (k, entries) =>
-          assert(entries.length <= cap)
-          entries.foreach { e =>
-            val t = truth.getOrElse((k, e.token), 0L)
-            assert(e.cnt >= t, s"$k/${e.token}: cnt ${e.cnt} < true $t")
-            assert(e.cnt - e.err <= t,
-              s"$k/${e.token}: lower bound ${e.cnt - e.err} > true $t")
-          }
-          val tracked = entries.map(_.token).toSet
-          truth.collect { case ((`k`, tok), c) if c > n(k) / cap => tok }
-            .foreach(tok => assert(tracked.contains(tok), s"$k missing $tok"))
-        }
-      } finally q1.stop()
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("ListState + event-time timer: idle sessions close on watermark, not on new data") {
-    implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    def ev(u: String, min: Long, t: String) =
-      StateV2.SessionEvent(u, new Timestamp(min * 60000L), t)
-    val mem = MemoryStream[StateV2.SessionEvent]
-    val events = mem.toDS().withWatermark("ts", "0 seconds")
-    val q = StateV2.attachSessions(events, gapMs = 30L * 60000)
-      .writeStream.format("memory").queryName("sess_out")
-      .outputMode("append").start()
-    try {
-      // batch 1: u1 opens a session; u2 has TWO in-batch sessions (gap
-      // inside the batch) — the first closes immediately. Events start
-      // at minute 1: a row at the INITIAL watermark (0) is dropped late.
-      mem.addData(Seq(ev("u1", 1, "view"), ev("u1", 6, "cart"),
-        ev("u2", 1, "view"), ev("u2", 91, "view")))
-      q.processAllAvailable()
-      // batch 2: only u2 speaks, but the advanced watermark fires u1's
-      // TIMER — u1's session closes with no u1 data in the batch (the
-      // no-data micro-batch after watermark advance runs the timers).
-      // u2's open session extends.
-      mem.addData(Seq(ev("u2", 101, "cart")))
-      q.processAllAvailable()
-      // batch 3: far-future u3 event pushes the watermark past u2's
-      // open session, firing its timer
-      mem.addData(Seq(ev("u3", 1000, "view")))
-      q.processAllAvailable()
-      val got = spark.table("sess_out").as[StateV2.SessionOut].collect()
-        .sortBy(s => (s.user_id, s.start_ms)).toSeq
-      assert(got === Seq(
-        StateV2.SessionOut("u1", 60000L, 6 * 60000L, 2L, "view>cart"),
-        StateV2.SessionOut("u2", 60000L, 60000L, 1L, "view"),
-        StateV2.SessionOut("u2", 91 * 60000L, 101 * 60000L, 2L, "view>cart")))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
 }

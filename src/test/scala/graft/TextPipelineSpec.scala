@@ -24,24 +24,6 @@ class TextPipelineSpec extends SparkSpec {
     assert(joined.map(_._3).sum > 0) // the denylist actually fires on this corpus
   }
 
-  test("observed quality gate: one-pass metrics equal direct aggregation") {
-    val (gated, ingest, kept) = TextAnalysis.qualityGateObserved(spark, sf)
-    val survivors = gated.count() // one action drives both observe nodes
-    val inGot = ingest.get
-    val keptGot = kept.get
-    val docs = Tables.documents(spark, sf)
-    val totalTokens = docs
-      .agg(sum(TextAnalysis.tokenCount(col("text")).cast("long"))).as[Long].head()
-    assert(inGot("n_docs") === docs.count())
-    assert(inGot("total_tokens") === totalTokens)
-    assert(keptGot("n_docs") === survivors)
-    val keptTokens = docs
-      .filter(TextAnalysis.qualityScore(col("text")) >= 0.5)
-      .agg(sum(TextAnalysis.tokenCount(col("text")).cast("long"))).as[Long].head()
-    assert(keptGot("total_tokens") === keptTokens)
-    assert(keptGot("n_docs").asInstanceOf[Long] <= inGot("n_docs").asInstanceOf[Long])
-  }
-
   test("epoch shuffle: total, per-shard seq contiguous, replayable, seed-sensitive") {
     val e1 = TextAnalysis.epochShuffle(spark, sf, seed = 1)
       .as[(Long, Int, Long)].collect()
